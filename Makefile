@@ -13,7 +13,7 @@ SF_SMOKE ?= /root/testdata/sf0.001
 SF_ORACLE ?= /root/testdata/sf0.01
 export PYTHONPATH := $(CURDIR)
 
-.PHONY: lint entry-smoke pkg-smoke test-smoke test test-full check-prefix check-full bench-smoke bench ci-smoke ci-full
+.PHONY: lint entry-smoke pkg-smoke test-smoke perfbench-test test test-full check-prefix check-full bench-smoke bench ci-smoke ci-full
 
 ## lint: ruff when installed (CI installs it); stdlib syntax gate otherwise
 lint:
@@ -44,6 +44,11 @@ test-smoke:
 	  tests/test_dashboard.py tests/test_metrics.py tests/test_config.py \
 	  tests/test_logging_setup.py tests/test_plans.py
 
+## perfbench-test: the repository benchmark's own tests (generators,
+## event-log parser, spans, timed plan; ~20 s)
+perfbench-test:
+	$(PYTHON) -m pytest -q perfbench/tests
+
 ## test: the DEFAULT (driver-verify) tier — correctness-critical pins
 ## (<10 min solo; pyproject addopts deselect `slow`)
 test:
@@ -70,8 +75,8 @@ bench-smoke:
 bench:
 	$(PYTHON) bench.py
 
-## ci-smoke: the per-commit rung — lint + driver contract + fast tests + gate slice + bench smoke
-ci-smoke: lint entry-smoke test-smoke check-prefix bench-smoke
+## ci-smoke: the per-commit rung — lint + driver contract + fast tests + benchmark tests + gate slice + bench smoke
+ci-smoke: lint entry-smoke test-smoke perfbench-test check-prefix bench-smoke
 
 ## ci-full: the endgame rung — everything, full registry sweep, full suite
 ci-full: lint entry-smoke test-full check-full bench

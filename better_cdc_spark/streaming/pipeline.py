@@ -35,17 +35,23 @@ must carry strictly increasing mtimes in stream order, because Spark's
 file source breaks modification-time ties arbitrarily (tools/e2e_load.py
 stamps them; the test fixtures always have).
 
-Scale: pending/commit stores are tiny (only in-flight transactions), and
-the sink anti-join is BOUNDED: the sink is partitioned by commit-time
-bucket (bucket width = the configured duplicate window, the reference's
-DUPLICATE_WINDOW, config.go:100 / readme.md:118), and each micro-batch
-anti-joins only the buckets its own events fall in. A replayed event
-carries the same deterministic commit timestamp as its first delivery,
-so its earlier copy lives in exactly the same bucket — per-epoch dedup
-IO is O(batch's commit-time span), not O(sink size), no matter how big
-the sink grows. This is strictly stronger than JetStream's wall-clock
-window (readme.md:121 admits duplicates outside the window; here the
-bucket lookup is exact for deterministic replays).
+Scale: the pending store is tiny (only in-flight transactions). The sink
+is partitioned by commit-time bucket (bucket width = the configured
+duplicate window, the reference's DUPLICATE_WINDOW, config.go:100 /
+readme.md:118), and each micro-batch anti-joins only the buckets its own
+events fall in. A replayed event carries the same deterministic commit
+timestamp as its first delivery, so its earlier copy lives in exactly the
+same bucket. What this bounds is the set of PARTITIONS a micro-batch
+lists and reads: the buckets its commit-time span touches, never the
+whole sink. It does not bound the files inside a touched bucket: every
+earlier micro-batch that wrote to that bucket left files there, and the
+dedup scan opens all of them (their footers, and every row group the
+timestamp range cannot skip). With daily buckets and a steady stream the
+scan therefore grows with the day's sink, e.g. 0 → 434,845 → 895,211
+bytes read over three consecutive micro-batches into one bucket. The
+bucket lookup is exact for deterministic replays, which is strictly
+stronger than JetStream's wall-clock window (readme.md:121 admits
+duplicates outside the window).
 """
 
 from __future__ import annotations
@@ -53,7 +59,7 @@ from __future__ import annotations
 import os
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from better_cdc_spark.session import ckpt
@@ -96,9 +102,11 @@ class CDCStreamPipeline:
         # dial, not the semantic dedup window: replays dedup exactly at any
         # width (same event ⇒ same commit ts ⇒ same bucket). Daily buckets
         # keep the partition-dir count sane over months of streaming while
-        # the per-epoch anti-join stays pruned to the batch's own days —
-        # the sub-day tightening comes free from the timestamp range
-        # predicate pushed into parquet row-group skipping.
+        # the per-epoch anti-join lists only the batch's own days. Inside a
+        # touched day the scan still opens every file earlier batches wrote
+        # there; the timestamp range pushed into parquet skips row groups
+        # outside the batch's span, not files, so the read grows with the
+        # day's sink.
         self.dedup_bucket_s = 86400.0
         self.sink_dir = os.path.join(work_dir, "sink")
         self.pending_dir = os.path.join(work_dir, "pending")
@@ -203,21 +211,27 @@ class CDCStreamPipeline:
     # -- the batch processor --------------------------------------------
 
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
-        spark = self.spark
         # Materialize the micro-batch ONCE before any branching — every
         # downstream consumer reads the checkpointed data, so the observe()
-        # metrics node fires exactly once per batch and the source is never
-        # re-scanned.
+        # metrics nodes fire exactly once per batch and the source is never
+        # re-scanned. The corrupt-record count rides on that same job as an
+        # Observation (fresh per epoch: one reports only its first action).
+        decode = Observation()
+        has_corrupt = "_corrupt_record" in batch_df.columns
+        if has_corrupt:
+            batch_df = batch_df.observe(
+                decode, F.count("_corrupt_record").alias("n_bad")
+            )
         batch_df = batch_df.transform(ckpt)
         # Decode-error policy (reference: decode failures are FATAL —
         # wal2json.go:69-74, asserted by wal2json_test.go:14 — or routed to
         # quarantine under policy=dlq). Corrupt JSON lines are captured by
         # PERMISSIVE mode into _corrupt_record; a changelog row without a
-        # recognizable action is undecodable by definition.
-        if "_corrupt_record" in batch_df.columns:
+        # recognizable action is undecodable by definition. Only a batch
+        # that holds corrupt lines pays for the crash/DLQ jobs below.
+        if has_corrupt:
             corrupt = batch_df.filter(F.col("_corrupt_record").isNotNull())
-            n_bad = corrupt.limit(1).count()
-            if n_bad:
+            if decode.get["n_bad"]:
                 if self.decode_policy == "crash":
                     bad = corrupt.select("_corrupt_record").first()[0]
                     raise ValueError(f"undecodable changelog record: {bad[:200]!r}")
@@ -231,57 +245,84 @@ class CDCStreamPipeline:
             batch_df = batch_df.filter(F.col("_corrupt_record").isNull()).drop(
                 "_corrupt_record"
             )
-        # Carry over pending (uncommitted) rows from previous batches.
-        # dropDuplicates on ingest_seq (the unique ingest ordinal) makes the
-        # carry-over idempotent: if the query died after the pending store
-        # was updated but before the epoch committed, the replayed batch
-        # overlaps the carried rows — without the dedup those rows would be
-        # double-counted and row_number would mint DIFFERENT event_ids for
-        # them, defeating the sink's event_id dedup. Also hardens against
-        # at-least-once source replays.
+        # Carry over pending (uncommitted) rows from previous batches and
+        # split them, with this batch's rows, into committed and in-flight
+        # transactions — all inside ONE checkpoint job with one shuffle on
+        # xid:
+        # - A row belongs to a committed transaction iff its xid has a
+        #   commit marker among the rows visible so far (this batch +
+        #   carried-over ones). A null xid never counts as committed — no
+        #   commit marker can name it.
+        # - Deduplicating on ingest_seq (the unique ingest ordinal) makes the
+        #   carry-over idempotent: if the query died after the pending store
+        #   was updated but before the epoch committed, the replayed batch
+        #   overlaps the carried rows — without the dedup those rows would
+        #   be double-counted and row_number would mint DIFFERENT event_ids
+        #   for them, defeating the sink's event_id dedup. Also hardens
+        #   against at-least-once source replays. A redelivered copy carries
+        #   its original's xid, so keying the dedup on (xid, ingest_seq)
+        #   drops exactly the same rows while reusing the flag's xid
+        #   partitioning and (xid, ingest_seq) sort. The flag is computed
+        #   before the dedup: copies cannot change a max.
+        tx = (
+            Window.partitionBy("xid")
+            .orderBy("ingest_seq")
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        )
+        has_commit = F.max(F.col("action") == "C").over(tx)
         pending = self._read_pending(batch_df, epoch_id)
         work = (
             batch_df.unionByName(pending)
-            .dropDuplicates(["ingest_seq"])
+            .withColumn(
+                "_committed",
+                F.col("xid").isNotNull() & F.coalesce(has_commit, F.lit(False)),
+            )
+            .dropDuplicates(["xid", "ingest_seq"])
             .transform(ckpt)
         )
-
-        # Commit markers visible so far (this batch + carried-over ones).
-        commits = work.filter(F.col("action") == "C").select("xid").distinct()
-        data = work.filter(F.col("action") != "C")
-
-        committed = work.join(F.broadcast(commits), "xid", "left_semi")
-        uncommitted = data.join(F.broadcast(commits), "xid", "left_anti")
+        committed = work.filter(F.col("_committed")).drop("_committed")
+        uncommitted = work.filter(
+            (F.col("action") != "C") & ~F.col("_committed")
+        ).drop("_committed")
 
         # Emit only complete transactions — the commit-boundary contract.
         envelope = normalize_changelog(
             committed, database=self.database, allowlist=self.allowlist
         )
 
-        # Idempotent sink with a BOUNDED dedup scan (R11/R14, the reference's
-        # DUPLICATE_WINDOW analog): the sink is hive-partitioned by
-        # commit_bucket = floor(commit_epoch / window). A replayed event has
-        # the same deterministic commit timestamp as its first delivery, so
-        # its earlier copy sits in exactly the bucket this batch writes to —
-        # anti-joining against ONLY the batch's own buckets is exact dedup
-        # while partition pruning keeps the read O(batch window), never
-        # O(sink). Null commit times (shouldn't occur post-normalize) land
-        # in bucket -1 so the isin() filter still covers them.
-        envelope = envelope.withColumn(
-            "commit_bucket",
-            F.coalesce(
-                F.floor(
-                    F.unix_timestamp(F.col("timestamp"))
-                    / F.lit(float(self.dedup_bucket_s))
-                ),
-                F.lit(-1),
-            ).cast("long"),
-        ).transform(ckpt)
-        span = envelope.agg(
-            F.collect_set("commit_bucket").alias("buckets"),
-            F.min("timestamp").alias("ts_lo"),
-            F.max("timestamp").alias("ts_hi"),
-        ).first()  # bounded: one micro-batch's commit-time span
+        # Idempotent sink with a partition-pruned dedup scan (R11/R14, the
+        # reference's DUPLICATE_WINDOW analog): the sink is hive-partitioned
+        # by commit_bucket = floor(commit_epoch / window). A replayed event
+        # has the same deterministic commit timestamp as its first delivery,
+        # so its earlier copy sits in exactly the bucket this batch writes
+        # to — anti-joining against ONLY the batch's own buckets is exact
+        # dedup while partition pruning keeps the listing to the batch's
+        # buckets (the files inside them are all read; see the module
+        # docstring). Null commit times (shouldn't occur post-normalize)
+        # land in bucket -1 so the isin() filter still covers them. The
+        # batch's bucket set and timestamp span are observed on the
+        # envelope's own checkpoint job.
+        sink_span = Observation()
+        envelope = (
+            envelope.withColumn(
+                "commit_bucket",
+                F.coalesce(
+                    F.floor(
+                        F.unix_timestamp(F.col("timestamp"))
+                        / F.lit(float(self.dedup_bucket_s))
+                    ),
+                    F.lit(-1),
+                ).cast("long"),
+            )
+            .observe(
+                sink_span,
+                F.collect_set("commit_bucket").alias("buckets"),
+                F.min("timestamp").alias("ts_lo"),
+                F.max("timestamp").alias("ts_hi"),
+            )
+            .transform(ckpt)
+        )
+        span = sink_span.get  # bounded: one micro-batch's commit-time span
         buckets = span["buckets"] or []
         existing = (
             self._read_sink_raw(envelope)
@@ -312,9 +353,9 @@ class CDCStreamPipeline:
         fresh.write.mode("append").partitionBy("commit_bucket").parquet(self.sink_dir)
 
         # Persist the new pending snapshot (epoch-versioned, crash-safe).
-        # No checkpoint needed: `uncommitted` derives from the already-
-        # materialized `work` via a broadcast anti-join, so the write is its
-        # single computation — an eager localCheckpoint here would only
+        # No checkpoint needed: `uncommitted` is a plain filter over the
+        # already-materialized `work`, so the write is its single
+        # computation — an eager localCheckpoint here would only
         # materialize the same rows twice.
         self._write_pending(uncommitted, epoch_id)
 

@@ -8,6 +8,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from better_cdc_spark.session import ckpt
@@ -26,9 +27,10 @@ def test_default_branch_is_local_checkpoint(spark, clean_env):
     # localCheckpoint truncates lineage to an RDD scan and needs no
     # checkpoint dir; the reliable dir must NOT have been created
     assert out.count() == 100
-    assert "ExistingRDD" in out._jdf.queryExecution().optimizedPlan().toString() or (
-        not os.path.exists(str(clean_env / "reliable"))
-    )
+    # the lineage is cut: the physical plan scans the checkpointed RDD
+    # (the logical plan names it LogicalRDD), not the original Range
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Scan ExistingRDD" in plan and "Range" not in plan
     assert not os.path.exists(str(clean_env / "reliable"))
     assert sorted(r["v"] for r in out.collect()) == sorted(
         r["v"] for r in df.collect()
@@ -68,3 +70,26 @@ def test_both_branches_agree_through_a_query_shaped_pipeline(
     monkeypatch.setenv("BCS_RELIABLE_CKPT", "1")
     reliable = sorted(map(tuple, pipeline().collect()))
     assert local == reliable
+
+
+@pytest.mark.parametrize("reliable", ["0", "1"])
+def test_observation_reports_through_ckpt_in_both_modes(
+    spark, clean_env, monkeypatch, reliable
+):
+    """The CDC pipeline reads side aggregates (corrupt count, sink bucket
+    span) from an Observation riding on its checkpoint job instead of a
+    separate action; that needs the metrics under either storage mode."""
+    monkeypatch.setenv("BCS_RELIABLE_CKPT", reliable)
+    obs = Observation()
+    df = spark.range(100).withColumn("k", F.col("id") % 4)
+    out = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.collect_set("k").alias("ks"),
+        F.max("id").alias("hi"),
+    ).transform(ckpt)
+    got = obs.get
+    assert got["n"] == 100
+    assert sorted(got["ks"]) == [0, 1, 2, 3]
+    assert got["hi"] == 99
+    assert out.count() == 100

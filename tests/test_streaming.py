@@ -295,6 +295,99 @@ def test_decode_error_dropped_under_skip_policy(spark, tmp_path):
     assert not os.path.exists(pipe.decode_dlq_dir)
 
 
+def _three_file_source(tmp_path, corrupt_in: int | None = None):
+    """Three segments, one complete transaction each (xid 100/200/300,
+    two inserts apiece), optionally with an undecodable line appended to
+    segment ``corrupt_in`` (1-based). Strictly increasing mtimes."""
+    src = tmp_path / "src3"
+    src.mkdir()
+    now = time.time()
+    for i in (1, 2, 3):
+        xid, seq = 100 * i, 10 * i
+        rows = [
+            _marker(seq, f"0/{i}0", "B", xid),
+            _data_row(seq + 1, f"0/{i}0", "I", xid, cols=_cols(seq + 1)),
+            _data_row(seq + 2, f"0/{i}0", "I", xid, cols=_cols(seq + 2)),
+            _marker(seq + 3, f"0/{i}0", "C", xid, TS),
+        ]
+        path = src / f"00{i}.json"
+        with open(path, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+            if i == corrupt_in:
+                f.write("{this is not json\n")
+        os.utime(path, (now - 40 + 10 * i, now - 40 + 10 * i))
+    return str(src)
+
+
+def _sink_xids(pipe):
+    return sorted({r[0] for r in pipe.sink().select("txid").collect()})
+
+
+# Spark jobs one clean micro-batch may launch: the decode checkpoint (1),
+# the pending merge (its xid shuffle, then the checkpoint: 2), the envelope
+# checkpoint (normalize's commit aggregate and its broadcast, the seq_in_tx
+# window shuffle, the checkpoint: 4), the sink's dedup-set broadcast and
+# append (2), and the pending snapshot write (1). The corrupt-record count,
+# the commit split and the sink's bucket span ride on those jobs; before
+# they did, an epoch launched 17-18.
+MAX_JOBS_PER_EPOCH = 10
+
+
+def test_epoch_job_count_is_pinned(spark, tmp_path):
+    import uuid
+
+    src = _three_file_source(tmp_path)
+    pipe = CDCStreamPipeline(spark, src, str(tmp_path / "jwork"))
+    sc = spark.sparkContext
+    process, groups = pipe._process_batch, []
+
+    def grouped(batch_df, epoch_id):
+        group = f"jobpin-{uuid.uuid4().hex}-e{epoch_id}"
+        groups.append(group)
+        sc.setJobGroup(group, group)
+        try:
+            return process(batch_df, epoch_id)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    pipe._process_batch = grouped
+    pipe.run_available()
+    assert _sink_xids(pipe) == [100, 200, 300]
+    jobs = [len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups]
+    assert len(jobs) == 3
+    assert max(jobs) <= MAX_JOBS_PER_EPOCH, jobs
+
+
+def test_late_corrupt_line_crash_stops_at_its_epoch(spark, tmp_path):
+    src = _three_file_source(tmp_path, corrupt_in=2)
+    pipe = CDCStreamPipeline(spark, src, str(tmp_path / "lcwork"))
+    with pytest.raises(Exception, match="undecodable changelog record"):
+        pipe.run_available()
+    # the clean epoch before the corrupt one committed; nothing after ran
+    assert _sink_xids(pipe) == [100]
+
+
+@pytest.mark.parametrize("policy", ["dlq", "skip"])
+def test_late_corrupt_line_is_handled_in_its_own_epoch(spark, tmp_path, policy):
+    from better_cdc_spark.config import load
+
+    src = _three_file_source(tmp_path, corrupt_in=2)
+    cfg = load(env={"FAILURE_POLICY": policy})
+    pipe = CDCStreamPipeline(spark, src, str(tmp_path / "lwork"), config=cfg)
+    pipe.run_available()
+    # clean epochs before and after the corrupt one, and the corrupt
+    # epoch's own decodable rows, all reach the sink
+    assert _sink_xids(pipe) == [100, 200, 300]
+    assert pipe.sink().count() == 6
+    if policy == "dlq":
+        dlq = spark.read.parquet(pipe.decode_dlq_dir)
+        assert dlq.count() == 1
+        assert "{this is not json" in dlq.first()["payload_prefix"]
+    else:
+        assert not os.path.exists(pipe.decode_dlq_dir)
+
+
 def _batch_df(spark, rows):
     from better_cdc_spark.schemas import CHANGE_LOG_SCHEMA
 
@@ -336,6 +429,36 @@ def test_pending_carryover_idempotent_under_epoch_replay(spark, tmp_path):
         "0/D0:400:INSERT:public.users:0",
         "0/D0:400:INSERT:public.users:1",
     ]
+
+
+def test_null_xid_rows_never_commit(spark, tmp_path):
+    """A null xid matches no commit marker, not even a null-xid one: its
+    data row is carried in pending, the marker is dropped, and a complete
+    transaction in the same batch is emitted as usual."""
+    pipe = CDCStreamPipeline(spark, str(tmp_path / "nosrc"), str(tmp_path / "work"))
+    batch = [
+        _marker(1, "0/G0", "B", 800),
+        _data_row(2, "0/G0", "I", 800, cols=_cols(1)),
+        _marker(3, "0/G0", "C", 800, TS),
+        _data_row(4, "0/G1", "I", None, cols=_cols(2)),
+        _marker(5, "0/G1", "C", None, TS),
+    ]
+    pipe._process_batch(_batch_df(spark, batch), epoch_id=0)
+    assert [r[0] for r in pipe.sink().select("event_id").collect()] == [
+        "0/G0:800:INSERT:public.users:0"
+    ]
+    assert [
+        (r["ingest_seq"], r["action"], r["xid"]) for r in pipe.pending().collect()
+    ] == [(4, "I", None)]
+
+    # a later null-xid commit marker does not release it either
+    pipe._process_batch(
+        _batch_df(spark, [_marker(6, "0/G2", "C", None, TS)]), epoch_id=1
+    )
+    assert pipe.sink().count() == 1
+    assert [
+        (r["ingest_seq"], r["action"], r["xid"]) for r in pipe.pending().collect()
+    ] == [(4, "I", None)]
 
 
 def test_incomplete_pending_snapshot_is_ignored(spark, tmp_path):
