@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -335,8 +336,6 @@ MAX_JOBS_PER_EPOCH = 10
 
 
 def test_epoch_job_count_is_pinned(spark, tmp_path):
-    import uuid
-
     src = _three_file_source(tmp_path)
     pipe = CDCStreamPipeline(spark, src, str(tmp_path / "jwork"))
     sc = spark.sparkContext
