@@ -3,7 +3,7 @@
 The FINAL stdout line is ONE compact JSON object {"metric": ..., "value":
 total_sec, "unit": "sec", "queries": {name: sec}, "sf": sf, ...} sized to
 fit the driver's 2000-byte tail-capture window. The full diagnostics
-(per-query baseline ratios, CDC/streaming/replay rigs) are printed on an
+(per-query anchor ratios, CDC/streaming/replay rigs) are printed on an
 earlier line AND written to bench_full_latest.json.
 
 Each timed run executes the full plan and consumes results via count()
@@ -18,7 +18,8 @@ import sys
 import statistics
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from better_cdc_spark.queries import load_all
 from better_cdc_spark.session import DEFAULT_SF_DIR, get_spark
@@ -48,137 +49,66 @@ HEADLINE = [
     "q97h_bm25_topk",            # inverted-index lexical retrieval
     "q95p_dup_span_extract",     # cross-doc span dedup + island merge
     "q95u_dup_span_extract_hashed",  # same, xxhash64 gram keys (2.7x fewer shuffle bytes)
-    # round-7 additions: first appearance is the cross-round reference
     "q98l_bpe_train_apply",      # iterative pair-count shuffles + bounded argmax
     "q99q_ahash_near_dup",       # image decode + banded hamming self-join
     "q94k_webdataset_ingest",    # tar shard parse + sample-key regroup
-    # round-7 continuation additions
     "q48_bitmap_overlap",        # chunked-bitmap segment intersection matrix
     "q94m_shortest_paths",       # multi-source BFS, 4 frontier rounds
     "q98q_zipf_vocab",           # token explode + topk window + integer fit
 ]
 
-# r1 per-query baseline (BENCH_r01.json, sf0.1) — the reference point for
-# the 2x regression envelope. Queries added after r1 have no baseline row;
-# their first bench appearance becomes the cross-round reference instead.
-R1_BASELINE = {
-    "q30_grouped_agg_tpch_q1": 0.835,
-    "q20_inner_join": 0.699,
-    "q25_broadcast_join": 0.72,
-    "q27_asof_join": 1.294,
-    "q40_ranking_windows": 0.26,
-    "q52_topk_per_group": 0.709,
-    "q34_having": 0.668,
-    "q36_stat_aggs": 0.268,
-    "qc01_cdc_normalize": 1.165,
-    "q95_exact_dedup": 0.452,
-    "q96_minhash_lsh": 3.315,
-    "q97_cosine_topk": 0.863,
-    "q98_text_stats": 0.235,
-    "q94_curation_pipeline": 2.862,
-}
+# Per-query wall anchors for the regression envelope. ANCHORS_R14.json
+# holds the measurement with its provenance (tools/reanchor.py: SOLO sf0.1;
+# per query the min of 3 warm runs, repeated in 3 independent JVMs; anchor
+# = median of the three mins). Headline queries without an anchor are not
+# gated.
+with open(os.path.join(ROOT, "ANCHORS_R14.json")) as _f:
+    ANCHORS = {n: a["anchor_sec"] for n, a in json.load(_f)["anchors"].items()}
 
-# first-appearance reference for post-r1 headline queries (BENCH_r04.json,
-# sf0.1).
-#
-# q96e is rebased to its r8 solo measurement: the r4 anchor (4.079 s) was
-# measured in an environment this VM class no longer reproduces for the
-# CPU-bound similarity joins specifically — the decisive head-to-head (r8,
-# same session, same VM): the VERBATIM r4-era q96e code runs 16.2 s today
-# while the current sparse+dense-verify plan runs 8.4 s, i.e. the current
-# code is 2x FASTER than the r4 code head-to-head and the cross-round raw
-# ratio (8.4/4.079 = 2.1) is pure environment drift. PLANS.md 'q96e
-# rebaseline' has the full experiment.
-R4_REFERENCE = {
-    "qh05_local_supplier_volume": 0.945,
-    "qh08_market_share": 1.168,
-    "qh21_waiting_supplier": 1.655,
-    "q94d_curation_pipeline_lsh": 2.57,
-    "q96d_semdedup": 4.277,
-    "q96e_tfidf_cosine": 8.4,  # r8 rebaseline (head-to-head above)
-    "q97h_bm25_topk": 1.047,
-    "q95p_dup_span_extract": 1.839,
-}
+# Steady-state E2E rig length; compare cdc_e2e ops/sec only at equal n_ops.
+E2E_OPS = 300_000
 
-# Drift CLASS of each reference-carrying headline query. Host drift is not
-# uniform across workload shapes (r8 and r11 both show the shuffle-bound
-# median moving one way while many-stage CPU-bound similarity jobs move
-# the other), so a single global median mis-normalizes whichever class it
-# wasn't computed from. Queries whose wall is dominated by exchanges /
-# sort-merge machinery are "shuffle"; queries dominated by per-row JVM or
-# Arrow compute across many narrow stages (hashing, regex, vector math,
-# candidate verification) are "cpu". Each query's envelope ratio is judged
-# against its OWN class median (plus the raw and global-median readings —
-# min() of all three, so the gate still never fakes a regression).
-DRIFT_CLASS = {
-    # shuffle-bound
-    "q30_grouped_agg_tpch_q1": "shuffle",
-    "q20_inner_join": "shuffle",
-    "q25_broadcast_join": "shuffle",
-    "q27_asof_join": "shuffle",
-    "qh05_local_supplier_volume": "shuffle",
-    "qh08_market_share": "shuffle",
-    "qh21_waiting_supplier": "shuffle",
-    "q40_ranking_windows": "shuffle",
-    "q52_topk_per_group": "shuffle",
-    "q34_having": "shuffle",
-    "q36_stat_aggs": "shuffle",
-    "qc01_cdc_normalize": "shuffle",
-    "q95_exact_dedup": "shuffle",
-    "q96_minhash_lsh": "shuffle",
-    # many-stage CPU-bound
-    "q97_cosine_topk": "cpu",
-    "q98_text_stats": "cpu",
-    "q94_curation_pipeline": "cpu",
-    "q94d_curation_pipeline_lsh": "cpu",
-    "q96d_semdedup": "cpu",
-    "q96e_tfidf_cosine": "cpu",
-    "q97h_bm25_topk": "cpu",
-    "q95p_dup_span_extract": "cpu",
-}
 
-# Fresh anchors measured on the ROUND-14 host profile (r13 verdict item 1:
-# the r1/r4 anchors are nine rounds and several VM-profile shifts old —
-# q97h_bm25_topk's normalized ratio crept 2.03 -> 2.23 across three rounds
-# of byte-identical code while its absolute wall stayed flat, which is
-# anchor rot, not regression). Method (tools/reanchor.py, provenance in
-# ANCHORS_R14.json, committed): SOLO sf0.1 local[32]; per query min of 3
-# warm runs; repeated in 3 INDEPENDENT JVMs; anchor = median of the three
-# mins — q97h's three rep-mins landed within 1% of each other (1.226 /
-# 1.235 / 1.238). The r1/r4 series above KEEPS running in every artifact
-# for cross-round history; vs_anchor_* below is the honest current-profile
-# reading the envelope narrative should quote.
-R14_ANCHOR = {
-    "q30_grouped_agg_tpch_q1": 0.508,
-    "q20_inner_join": 0.38,
-    "q25_broadcast_join": 0.389,
-    "q27_asof_join": 0.785,
-    "q40_ranking_windows": 0.15,
-    "q52_topk_per_group": 0.551,
-    "q34_having": 0.573,
-    "q36_stat_aggs": 0.199,
-    "qc01_cdc_normalize": 0.62,
-    "q95_exact_dedup": 0.246,
-    "q96_minhash_lsh": 1.623,
-    "q97_cosine_topk": 0.558,
-    "q98_text_stats": 0.143,
-    "q94_curation_pipeline": 1.884,
-    "qh05_local_supplier_volume": 0.705,
-    "qh08_market_share": 0.734,
-    "qh21_waiting_supplier": 1.038,
-    "q94d_curation_pipeline_lsh": 2.215,
-    "q96d_semdedup": 2.338,
-    "q96e_tfidf_cosine": 4.83,
-    "q97h_bm25_topk": 1.235,
-    "q95p_dup_span_extract": 1.994,
-}
+def envelope(times: dict[str, float], anchors: dict[str, float]) -> dict:
+    """The 2x regression envelope: a pure function of walls and anchors.
+
+    r = wall / anchor per anchored query; queries with no anchor are
+    ignored. The median r is the session's host-drift estimate (this host's
+    walls drift 2-4x between sessions on identical plans). A query violates
+    the envelope when min(r, r / median) > 2 — it is >2x its anchor under
+    the most favourable drift reading, so uniform drift never fails the
+    gate — or when its raw r > 4, which backstops a correlated regression
+    large enough to move the median itself.
+    """
+    raw = {n: t / anchors[n] for n, t in times.items() if n in anchors}
+    med = statistics.median(raw.values()) if raw else 1.0
+    violators = [n for n, r in raw.items() if min(r, r / med) > 2.0 or r > 4.0]
+    return {
+        "ratios": {n: round(r, 3) for n, r in raw.items()},
+        "median": round(med, 3),
+        "violators": violators,
+        "ok": not violators,
+    }
+
+
+def _min_wall(action, reps: int = 3) -> float:
+    """min over ``reps`` timed calls: the first run pays one-time plan
+    compilation / AQE scheduling, and this host's wall clock is noisy
+    (±20-30% run-to-run), so the min tracks the steady-state data path."""
+    best = float("inf")
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        action()
+        best = min(best, time.perf_counter() - t0)
+    return best
+
 
 # Anchors for the fixed per-class drift probes below, measured on the
 # round-12 host (min-of-3, solo session, sf0.1). Future rounds divide the
 # probe's fresh wall by its anchor to get a QUERY-INDEPENDENT per-class
-# shift estimate alongside the query-derived medians. PINNED: neither the
-# probe code nor these numbers may change once recorded, or the cross-round
-# comparison is broken.
+# shift estimate alongside the envelope's query-derived median. PINNED:
+# neither the probe code nor these numbers may change once recorded, or the
+# cross-round comparison is broken.
 PROBE_ANCHOR = {"shuffle": 0.512, "cpu": 0.691}
 
 
@@ -380,16 +310,8 @@ def run_blocked_window_bench(spark, sf_dir: str) -> dict:
     classic = pv.withColumn("below", F.coalesce(F.sum("c").over(wcl), F.lit(0)))
     blocked = blocked_cumsum(pv, "v", "c", "below")
 
-    def best_of(df, reps: int = 3) -> float:
-        best = float("inf")
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df.filter(F.col("below") >= 0).count()
-            best = min(best, time.perf_counter() - t0)
-        return best
-
-    t_classic = best_of(classic)
-    t_blocked = best_of(blocked)
+    t_classic = _min_wall(classic.filter(F.col("below") >= 0).count)
+    t_blocked = _min_wall(blocked.filter(F.col("below") >= 0).count)
     return {
         "metric": "blocked_cumsum_vs_single_task_window",
         "n_frame_rows": n_frame,
@@ -474,57 +396,6 @@ SF1_EXTRA_PROBES = {
 }
 
 
-# One-time 10x-scale e2e measurement (r12 verdict item 7): the per-round
-# cdc_e2e block stays at 300k ops for cross-round comparability; this
-# pinned block records the rig run SOLO at 1M ops — 10x the usual run
-# length — showing the streaming/publish path holds (indeed improves, as
-# fixed startup amortizes) its throughput at a bigger run. Peak RSS
-# sampled at 1 Hz over the whole run (JVM = Spark local[32] driver).
-# Reproduce: PYTHONPATH=. python tools/e2e_load.py 1000000 4
-# Companion pinned measurement (r13 verdict item 5): the SAME 1M-op corpus
-# through the COMMITTED entrypoint — `python -m better_cdc_spark SRC
-# --once` in its own process, streaming listener + health surface attached
-# (tools/app_load.py; knobs passed as env vars through EngineConfig the
-# way an operator would). Drain wall is the app's own logged
-# processAllAvailable segment, the same segment the rig times. Result:
-# the composed service holds the rig's throughput — 47.3k vs 46.9k ops/s,
-# +0.7%. Peak JVM RSS reads higher than the rig's run (14.5 vs 8.2 GiB)
-# purely as GC high-water timing in the same 32g heap, not a leak: the
-# sink holds exactly 1M events and the python driver stays at 139 MiB.
-# Reproduce: PYTHONPATH=. python tools/app_load.py 1000000 4  (SOLO)
-APP_SCALE_1M = {
-    "metric": "cdc_app_ops_per_sec",
-    "value": 47259.0,
-    "unit": "ops/sec",
-    "n_ops": 1_000_000,
-    "n_batches": 4,
-    "wall_sec": 21.16,
-    "process_wall_sec": 30.82,
-    "sink_events": 1_000_000,
-    "peak_jvm_rss_mib": 14456,
-    "peak_python_rss_mib": 139,
-    "vs_rig_ratio": 1.007,  # 47259.0 / 46932.6 (E2E_SCALE_1M)
-    "measured_round": 14,
-    "solo": True,
-}
-
-E2E_SCALE_1M = {
-    "metric": "cdc_e2e_ops_per_sec",
-    "value": 46932.6,
-    "unit": "ops/sec",
-    "n_ops": 1_000_000,
-    "n_batches": 4,
-    "wall_sec": 21.31,
-    "sink_events": 1_000_000,
-    "batch_duration_ms_avg": 5183.5,
-    "batch_duration_ms_last": 7769.0,
-    "peak_jvm_rss_mib": 8152,
-    "peak_python_rss_mib": 139,
-    "measured_round": 13,
-    "solo": True,
-}
-
-
 def run_sf1_scaling(spark, sf_dir: str, base_times: dict[str, float]) -> dict:
     """Empirical scaling exponents for the headline similarity queries.
 
@@ -533,12 +404,13 @@ def run_sf1_scaling(spark, sf_dir: str, base_times: dict[str, float]) -> dict:
     sf0.1. This fabricates the sf1.0-equivalent corpus — 10x mutated
     replicas of the sf0.1 documents table (50k docs; same near-dup
     structure the generator uses: ~10% exact dupes, the rest per-copy
-    prefixed variants) — in /tmp, runs each query once against it, and
-    reports exponent = log10(wall_sf1 / wall_sf0.1): 1.0 is linear,
-    O(n log n) lands ~1.05-1.15, anything ≥ 1.4 means a candidate set is
-    growing superlinearly. Single timed run per query (the session is
-    already warm from the headline min-of-3; at 10x data the one-time
-    plan cost is noise) — treat exponents as ±0.1, not three decimals.
+    mutated variants; tools/sf1_corpus.amplify_documents) — in /tmp, runs
+    each query once against it, and reports exponent = log10(wall_sf1 /
+    wall_sf0.1): 1.0 is linear, O(n log n) lands ~1.05-1.15, anything
+    ≥ 1.4 means a candidate set is growing superlinearly. Single timed run
+    per query (the session is already warm from the headline min-of-3; at
+    10x data the one-time plan cost is noise) — treat exponents as ±0.1,
+    not three decimals.
     """
     import shutil
     import tempfile
@@ -557,9 +429,7 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
     import gc
     import math
 
-    from pyspark.sql import functions as F
-
-    from better_cdc_spark.io import load_table
+    from tools.sf1_corpus import N_COPIES, amplify_documents
 
     # shed the session state earlier bench sections pinned (cached frames,
     # localCheckpoint RDDs) — the scale_probe lesson: accumulated executor
@@ -568,70 +438,7 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
     spark.catalog.clearCache()
 
     registry = load_all()
-    docs = load_table(spark, sf_dir, "documents")
-    n_copies = 10
-    # Constant dup DENSITY, like a real bigger corpus: copy 0 is the
-    # original, copy 1 an exact dup (10% exact-dup rate), copies 2-9
-    # mutate every 3rd token with a copy-specific suffix — cross-copy
-    # cosine/Jaccard drops below near-dup thresholds, so the true
-    # near-dup pair count grows LINEARLY with the corpus. (Naive
-    # prefix-only mutation gives every doc 9 genuine near-twins; the
-    # output itself is then quadratic and the probe can't distinguish
-    # algorithmic blowup from output growth.)
-    toks = F.split(F.col("text"), " ")
-    mutated = F.array_join(
-        F.zip_with(
-            toks,
-            F.sequence(F.lit(1), F.size(toks)),
-            lambda w, i: F.when(
-                (i + F.col("copy")) % 3 == 0,
-                F.concat(w, F.lit("x"), F.col("copy").cast("string")),
-            ).otherwise(w),
-        ),
-        " ",
-    )
-    amplified = (
-        docs.crossJoin(spark.range(n_copies).select(F.col("id").alias("copy")))
-        .select(
-            (F.col("doc_id") + F.col("copy") * 1_000_000).alias("doc_id"),
-            F.when(F.col("copy") <= 1, F.col("text"))
-            .otherwise(mutated)
-            .alias("text"),
-            "lang",
-            "source",
-            "n_chars",
-            "copy",
-        )
-        .drop("copy")
-    )
-    amplified.repartition(32).write.mode("overwrite").parquet(
-        f"{sf1_dir}/documents.parquet"
-    )
-    # embeddings, same constant-density scheme (q96d/q94d read them):
-    # copy 1 is an exact dup, copies 2-9 perturb one copy-dependent
-    # dimension so cross-copy cosine leaves near-dup range
-    emb = load_table(spark, sf_dir, "embeddings")
-    emb_amp = (
-        emb.crossJoin(spark.range(n_copies).select(F.col("id").alias("copy")))
-        .select(
-            (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
-            F.when(F.col("copy") <= 1, F.col("embedding"))
-            .otherwise(
-                F.transform(
-                    F.col("embedding"),
-                    lambda x, i: F.when(
-                        i == F.col("copy") % 64,
-                        x + (F.lit(0.5) + F.col("copy") * 0.125).cast("float"),
-                    ).otherwise(x),
-                )
-            )
-            .alias("embedding"),
-            "label",
-        )
-    )
-    emb_amp.repartition(32).write.mode("overwrite").parquet(
-        f"{sf1_dir}/embeddings.parquet"
-    )
+    amplify_documents(spark, sf_dir, sf1_dir)
 
     probes = [
         (name, registry[name].fn, base_times[name])
@@ -649,12 +456,7 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
             # registry headline walls its ratio divides by — a cold base
             # would inflate base_t and deflate ratio/exponent in
             # sf1_exponent_max's favor.
-            walls = []
-            for _ in range(2):
-                t0 = time.perf_counter()
-                rows_base = fn(spark, sf_dir).count()
-                walls.append(time.perf_counter() - t0)
-            base_t = round(min(walls), 3)
+            base_t = round(_min_wall(lambda: fn(spark, sf_dir).count(), reps=2), 3)
         t0 = time.perf_counter()
         rows_sf1 = fn(spark, sf1_dir).count()
         wall = time.perf_counter() - t0
@@ -676,12 +478,12 @@ def _run_sf1_scaling_at(spark, sf_dir: str, base_times: dict[str, float],
             "rows_sf1": rows_sf1,
             "rows_ratio": round(rows_sf1 / max(rows_base, 1), 2),
         }
-    return {"n_docs_sf1": 50000, "amplification": n_copies, "queries": out}
+    return {"n_docs_sf1": 50000, "amplification": N_COPIES, "queries": out}
 
 
 def build_compact_line(full: dict) -> str:
     """The FINAL stdout line, distilled from the full diagnostics dict:
-    the driver's tail window is 2000 bytes (r7's 2.5 KB line got its head
+    the driver's tail window is 2000 bytes (a 2.5 KB line got its head
     clipped -> parsed: null), so this must stay under it — pinned by
     tests/test_bench_probes.py against the committed artifact."""
     compact = {
@@ -691,50 +493,21 @@ def build_compact_line(full: dict) -> str:
         "queries": full["queries"],
         "sf": full["sf"],
         "envelope_ok": full["envelope_ok"],
-        "vm_shift_median": full["vm_shift_median"],
-        "vm_shift_shuffle": full["vm_shift_class"].get("shuffle"),
-        "vm_shift_cpu": full["vm_shift_class"].get("cpu"),
+        "anchor_shift_median": full["anchor_shift_median"],
+        "vs_anchor_max": max(full["vs_anchor"].values(), default=None),
         "probe_shift_shuffle": full["probe_shift"].get("shuffle"),
         "probe_shift_cpu": full["probe_shift"].get("cpu"),
-        "vs_class_norm_max": max(full["vs_class_norm"].values(), default=None),
-        # honest current-profile drift reading (R14_ANCHOR provenance);
-        # .get(): pre-r14 artifacts (the committed test fixture) lack it —
-        # and then anchor_round must be None too, not a claim that r14
-        # anchoring ran on a dict that carries no anchor readings
-        "anchor_round": 14 if full.get("vs_anchor_r14") else None,
-        "vs_anchor_max": max(
-            full.get("vs_anchor_r14", {}).values(), default=None
-        ),
-        "vs_anchor_class_norm_max": max(
-            full.get("vs_anchor_class_norm", {}).values(), default=None
-        ),
-        "q97h_anchor_class_norm": full.get("vs_anchor_class_norm", {}).get(
-            "q97h_bm25_topk"
-        ),
         "sf1_exponent_max": max(
             (q["exponent"]
              for q in full["sf1_scaling"].get("queries", {}).values()),
             default=None,
         ),
         "cdc_e2e_ops_per_sec": full["cdc_e2e"].get("value"),
-        # "pinned_r13" in the key: a one-time SOLO measurement re-emitted
-        # verbatim each round (see E2E_SCALE_1M), NOT a live per-run
-        # number — a later 1M-scale regression will not move it.
-        "e2e_1m_pinned_r13_ops_per_sec": full["e2e_scale_1m"]["value"],
-        "e2e_1m_pinned_r13_peak_jvm_rss_mib":
-            full["e2e_scale_1m"]["peak_jvm_rss_mib"],
-        # the composed entrypoint at the same 1M scale (tools/app_load.py)
-        "app_1m_pinned_r14_ops_per_sec":
-            full.get("app_scale_1m", {}).get("value"),
-        "app_1m_pinned_r14_vs_rig":
-            full.get("app_scale_1m", {}).get("vs_rig_ratio"),
         "streaming_events_per_sec": full["streaming"].get("value"),
         "txlog_replay_ms_per_epoch": full["replay_sink"].get(
             "txlog_replay_ms_per_epoch"
         ),
         "blocked_vs_window_ratio": full["blocked_window"].get("ratio"),
-        "vs_baseline_max": max(full["vs_baseline"].values(), default=None),
-        "vs_r4_norm_max": max(full["vs_r4_norm"].values(), default=None),
     }
     line = json.dumps(compact)
     if len(line) > 1900:  # belt-and-braces: drop per-query detail before clipping
@@ -754,94 +527,37 @@ def main() -> None:
     registry["q30_grouped_agg_tpch_q1"].fn(spark, sf_dir).count()
 
     # Query-independent drift evidence: the pinned probe pair, run HERE —
-    # right after warm-up on a still-fresh session — because the r12
-    # anchors were measured under exactly these conditions; running the
-    # probes at the end of the bench (r12's first wiring) read them under
-    # end-of-session memory pressure and skewed the shuffle shift 1.37 vs
-    # the query-derived 0.74. shift = fresh wall / r12 anchor, per class.
+    # right after warm-up on a still-fresh session — because the probe
+    # anchors were measured under exactly these conditions; probes run at
+    # the end of the bench read end-of-session memory pressure instead.
+    # shift = fresh wall / probe anchor, per class.
     probe_walls = run_class_probes(spark, sf_dir)
     probe_shift = {
         cls: round(probe_walls[cls] / PROBE_ANCHOR[cls], 3)
         for cls in probe_walls
     }
 
-    # min of 3 runs: the first run pays one-time plan compilation / AQE
-    # scheduling, and this VM's wall clock is noisy (±20-30% run-to-run);
-    # the min reflects the engine's steady-state data path, which is what
-    # the cross-round 2x regression envelope should track.
-    times: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            registry[name].fn(spark, sf_dir).count()
-            best = min(best, time.perf_counter() - t0)
-        times[name] = round(best, 3)
-
-    # Second-chance re-time for envelope violators: this VM's wall clock
-    # swings 3-8x run-to-run (PLANS.md), and a single transient spike can
-    # push one query past its 2x gate even though an immediate re-run
-    # lands UNDER the reference (observed r9: q97h 2.419 s then 1.029 s
-    # in back-to-back solo runs of byte-identical code). Re-timing only
-    # the violators — still real executions, still min() — removes the
-    # one-bad-window failure mode without loosening the gate: a query
-    # that is GENUINELY >2x slower stays >2x across six runs.
-    def _violators(ts: dict[str, float]) -> list[str]:
-        med0_vals = [ts[n] / R1_BASELINE[n] for n in ts if n in R1_BASELINE]
-        med0 = statistics.median(med0_vals) if med0_vals else 1.0
-        out = []
-        for n, t in ts.items():
-            ref = R1_BASELINE.get(n) or R4_REFERENCE.get(n)
-            if ref is None:
-                continue
-            r = t / ref
-            if min(r, r / max(med0, 1e-9)) > 2.0:
-                out.append(n)
-        return out
-
-    # Retime audit trail (r16, from r15 ADVICE): the violator re-time is
-    # asymmetric by design (only >2x readings get extra samples), so the
-    # artifact records every query's PRE-retime wall and how many retime
-    # passes touched it — the retime's effect on the headline numbers is
-    # then fully auditable across rounds.
-    retime_log: dict[str, dict] = {}
-
-    def _retime(names: list[str]) -> None:
-        for name in names:
-            entry = retime_log.setdefault(
-                name, {"pre_retime_sec": times[name], "n_retime_passes": 0}
-            )
-            entry["n_retime_passes"] += 1
-            best = times[name]
-            for _ in range(3):
-                t0 = time.perf_counter()
-                registry[name].fn(spark, sf_dir).count()
-                best = min(best, time.perf_counter() - t0)
-            times[name] = round(best, 3)
-
-    _retime(_violators(times))
+    times = {
+        name: round(_min_wall(lambda: registry[name].fn(spark, sf_dir).count()), 3)
+        for name in names
+    }
 
     # e2e CDC load rig (the reference's scripts/e2e-load-test.sh analog):
-    # full pipeline ops/sec as a sibling metric. n_ops is recorded in the
-    # row — compare ops/sec only at equal n_ops across rounds.
+    # full pipeline ops/sec as a sibling metric.
     from tools.e2e_load import run_load
 
-    e2e_ops = int(os.environ.get("SPARK_GRAFT_E2E_OPS", "300000"))
-    cdc_e2e = run_load(spark, e2e_ops, n_batches=4)
+    cdc_e2e = run_load(spark, E2E_OPS, n_batches=4)
 
     # Structured Streaming wall metric (q81c incremental OHLC): drive the
     # finite event stream to completion and report source events/sec so
-    # streaming-path regressions show up in BENCH deltas. Same VM-variance
-    # caveat as every wall number here (PLANS.md documents ±3-8x swings);
-    # min-of-2 keeps the cost of the extra streaming runs bounded.
+    # streaming-path regressions show up in BENCH deltas. min-of-2 keeps
+    # the cost of the extra streaming runs bounded.
     from better_cdc_spark.io import load_table
 
     n_events = load_table(spark, sf_dir, "events").count()
-    stream_best = float("inf")
-    for _ in range(2):
-        t0 = time.perf_counter()
-        registry["q81c_streaming_ohlc"].fn(spark, sf_dir).count()
-        stream_best = min(stream_best, time.perf_counter() - t0)
+    stream_best = _min_wall(
+        lambda: registry["q81c_streaming_ohlc"].fn(spark, sf_dir).count(), reps=2
+    )
     streaming = {
         "metric": "q81c_streaming_ohlc_events_per_sec",
         "value": round(n_events / stream_best, 1),
@@ -858,135 +574,57 @@ def main() -> None:
     # its pruned sink partitions and join per epoch. Reported per-epoch.
     replay_sink = run_replay_sink_bench(spark, sf_dir)
 
-    # Blocked-op microbench: the r10 two-level window swap, as data.
+    # Blocked-op microbench: the two-level window swap, as data.
     blocked_win = run_blocked_window_bench(spark, sf_dir)
 
-    # Empirical scaling exponents at the sf1.0-equivalent corpus (opt out
-    # with SPARK_GRAFT_SF1_SCALING=0 for quick local iterations). A probe
+    # Empirical scaling exponents at the sf1.0-equivalent corpus. A probe
     # failure (e.g. /tmp pressure on the fabricated corpus) must degrade
     # to a missing block, never take down the whole BENCH artifact.
-    sf1_scaling: dict = {}
-    if os.environ.get("SPARK_GRAFT_SF1_SCALING", "1") != "0":
-        try:
-            sf1_scaling = run_sf1_scaling(spark, sf_dir, times)
-        except Exception as exc:  # noqa: BLE001 - diagnostics-only path
-            sf1_scaling = {"error": f"{type(exc).__name__}: {exc}"}
+    try:
+        sf1_scaling = run_sf1_scaling(spark, sf_dir, times)
+    except Exception as exc:  # noqa: BLE001 - diagnostics-only path
+        sf1_scaling = {"error": f"{type(exc).__name__}: {exc}"}
 
-    # Second, SPACED re-time of surviving violators (r15, declared in
-    # OPTIMIZATION_r15.md): the r15 mid-round run caught the host slowing
-    # ~2.5-4x MID-BENCH for a window that outlived the immediate re-time —
-    # q97h (byte-identical code, untouched this round) read 2.47x its
-    # reference while queries timed minutes earlier read 0.8x, and
-    # unchanged late-positioned queries (q94m, q98q) read 2.5x too.
-    # Re-timing violators once more AFTER the multi-minute rig sections
-    # samples a different host window; min() semantics are unchanged and
-    # every number is still a real execution — a genuine 2x regression
-    # stays 2x in every window, while a transient host window stops
-    # failing the round.
-    _retime(_violators(times))
-    total = round(sum(times.values()), 3)
-
-    # mechanical 2x-envelope check vs the r1 baseline (shared queries only)
-    vs_baseline = {
-        n: round(times[n] / R1_BASELINE[n], 3) for n in times if n in R1_BASELINE
-    }
-    # queries added after r1 track against their first bench appearance
-    # (r4) instead, so every headline row has a mechanical reference
-    vs_r4 = {
-        n: round(times[n] / R4_REFERENCE[n], 3)
-        for n in times
-        if n in R4_REFERENCE and n not in R1_BASELINE
-    }
-    # VM-drift handling: this rig's wall clock shifts 1.2-3x between rounds
-    # on identical plans (r6->r7 slowed every zero-shuffle narrow map
-    # uniformly; r7->r8 sped the shuffle-bound median up 1.8x while the
-    # CPU-bound similarity joins did NOT follow — drift is not even
-    # uniform within a round). The median vs_baseline ratio across the 14
-    # r1 queries is the round's VM-shift estimate; each query is judged on
-    # min(raw, raw/median): a query trips the gate only when it is >2x its
-    # reference under the MOST FAVORABLE VM interpretation — i.e. a
-    # regression no amount of host drift explains. (A strict both-sided
-    # gate would need per-query VM characterization; min() never fakes a
-    # regression and still catches every real >2x one.)
-    med = statistics.median(vs_baseline.values()) if vs_baseline else 1.0
-    vs_r4_norm = {n: round(r / max(med, 1e-9), 3) for n, r in vs_r4.items()}
-
-    # Per-CLASS medians (r11 verdict: drift is class-shaped — the global
-    # median is computed from the 14 shuffle-dominated r1 queries and
-    # over-penalizes the CPU class when the host drifts them apart). Each
-    # query is judged against the median of ITS drift class; the envelope
-    # takes min(raw, global-normalized, class-normalized) — still never
-    # fakes a regression, still catches any >2x no drift story explains.
-    all_ratios = {**vs_baseline, **vs_r4}
-    med_class: dict[str, float] = {}
-    for cls in ("shuffle", "cpu"):
-        vals = [r for n, r in all_ratios.items() if DRIFT_CLASS.get(n) == cls]
-        med_class[cls] = statistics.median(vals) if vals else med
-    vs_class_norm = {
-        n: round(r / max(med_class.get(DRIFT_CLASS.get(n, ""), med), 1e-9), 3)
-        for n, r in all_ratios.items()
-    }
-    # Two-term gate: the normalized min catches per-query regressions no
-    # drift story explains; the RAW absolute cap (4x) backstops the case
-    # where a correlated real regression across most of one ~8-query class
-    # shifts that class median and would otherwise normalize itself away.
-    envelope_ok = all(
-        min(r, r / max(med, 1e-9), vs_class_norm[n]) <= 2.0 and r <= 4.0
-        for n, r in all_ratios.items()
-    )
-
-    # r14 anchors (fresh current-profile measurement; see R14_ANCHOR
-    # comment + ANCHORS_R14.json): same normalization machinery, honest
-    # denominator. The r1/r4 metrics above keep running for history; the
-    # drift-watch narrative reads THESE.
-    vs_anchor = {
-        n: round(times[n] / R14_ANCHOR[n], 3) for n in times if n in R14_ANCHOR
-    }
-    anchor_med_class: dict[str, float] = {}
-    for cls in ("shuffle", "cpu"):
-        vals = [r for n, r in vs_anchor.items() if DRIFT_CLASS.get(n) == cls]
-        anchor_med_class[cls] = statistics.median(vals) if vals else 1.0
-    vs_anchor_class_norm = {
-        n: round(r / max(anchor_med_class.get(DRIFT_CLASS.get(n, ""), 1.0), 1e-9), 3)
-        for n, r in vs_anchor.items()
-    }
+    # SPACED re-time of envelope violators, AFTER the multi-minute rig
+    # sections: the host has been seen slowing ~2.5-4x MID-BENCH for a
+    # window that outlived an immediate re-run (byte-identical q97h read
+    # 2.47x its reference while queries timed minutes earlier read 0.8x).
+    # Re-timing violators in a later host window keeps min() semantics and
+    # every number a real execution — a genuine 2x regression stays 2x in
+    # every window. `retime` records each touched query's first wall, so
+    # the retime's effect on the headline numbers stays auditable.
+    retime = {}
+    for name in envelope(times, ANCHORS)["violators"]:
+        retime[name] = times[name]
+        again = _min_wall(lambda: registry[name].fn(spark, sf_dir).count())
+        times[name] = round(min(times[name], again), 3)
+    env = envelope(times, ANCHORS)
 
     full = {
         "metric": "headline_queries_total_wall",
-        "value": total,
+        "value": round(sum(times.values()), 3),
         "unit": "sec",
         "queries": times,
         "sf": sf,
+        "envelope_ok": env["ok"],
+        "vs_anchor": env["ratios"],
+        "anchor_shift_median": env["median"],
+        "probe_walls": probe_walls,
+        "probe_shift": probe_shift,
+        "retime": retime,
         "cdc_e2e": cdc_e2e,
         "streaming": streaming,
         "replay_sink": replay_sink,
         "blocked_window": blocked_win,
-        "vs_baseline": vs_baseline,
-        "vs_r4": vs_r4,
-        "vm_shift_median": round(med, 3),
-        "vs_r4_norm": vs_r4_norm,
-        "vm_shift_class": {c: round(v, 3) for c, v in med_class.items()},
-        "vs_class_norm": vs_class_norm,
-        "vs_anchor_r14": vs_anchor,
-        "anchor_shift_class": {c: round(v, 3) for c, v in anchor_med_class.items()},
-        "vs_anchor_class_norm": vs_anchor_class_norm,
-        "probe_walls": probe_walls,
-        "probe_shift": probe_shift,
-        "retime": retime_log,
         "sf1_scaling": sf1_scaling,
-        "e2e_scale_1m": E2E_SCALE_1M,
-        "app_scale_1m": APP_SCALE_1M,
-        "envelope_ok": envelope_ok,
     }
     # Full diagnostics go to a file + an early stdout line; the FINAL stdout
     # line is a compact subset guaranteed to fit the driver's 2000-byte tail
-    # window (r7's 2.5 KB line got its head clipped -> parsed: null).
-    with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                           "bench_full_latest.json"), "w") as f:
+    # window.
+    with open(os.path.join(ROOT, "bench_full_latest.json"), "w") as f:
         json.dump(full, f, indent=1)
     print(json.dumps(full))
-    line = build_compact_line(full)
-    print(line)
+    print(build_compact_line(full))
 
 
 if __name__ == "__main__":

@@ -33,6 +33,9 @@ def get_spark(app_name: str = "better_cdc_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.spill.compress", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
+        # reliable-mode ckpt files (BCS_RELIABLE_CKPT=1) are deleted once
+        # their frame is garbage collected instead of piling up unbounded
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -53,15 +56,19 @@ def ckpt(df):
     ``/tmp/bcs_reliable_ckpt``; point it at HDFS/object storage on a real
     deployment) — same plan-truncation semantics, recomputable-free
     recovery after executor death. The env is read per call so tests cover
-    both branches in one process; the flag flips the storage contract only,
-    never results.
+    both branches in one process: the context's checkpoint dir is re-bound
+    whenever it is not under the current ``BCS_CKPT_DIR``. The flag flips
+    the storage contract only, never results.
     """
     if os.environ.get("BCS_RELIABLE_CKPT", "0") == "1":
         sc = df.sparkSession.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(
-                os.environ.get("BCS_CKPT_DIR", "/tmp/bcs_reliable_ckpt")
-            )
+        Path = sc._jvm.org.apache.hadoop.fs.Path
+        want = Path(os.environ.get("BCS_CKPT_DIR", "/tmp/bcs_reliable_ckpt"))
+        want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+        cur = sc._jsc.sc().getCheckpointDir()
+        # Spark checkpoints under a fresh UUID subdirectory of the given dir
+        if cur.isEmpty() or not Path(cur.get()).getParent().equals(want):
+            sc.setCheckpointDir(want.toString())
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
 

@@ -136,8 +136,10 @@ def run_to_memory(
     # Materialize and DROP the sink table: the memory sink holds its rows
     # via a catalog strong reference forever, so a long session running
     # many streaming queries (full sweep ≈ 30+) accumulates every result
-    # table. localCheckpoint blocks, by contrast, are released by the
-    # ContextCleaner once the returned frame is garbage collected.
+    # table. The ckpt copy returned instead is released once the frame is
+    # garbage collected: the ContextCleaner drops localCheckpoint blocks
+    # (default mode), and deletes reliable-mode checkpoint files only
+    # because get_spark sets spark.cleaner.referenceTracking.cleanCheckpoints.
     spark = sdf.sparkSession
     out = spark.table(name).transform(ckpt)
     spark.catalog.dropTempView(name)

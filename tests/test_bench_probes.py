@@ -1,4 +1,5 @@
-"""Bench plumbing the driver runs per-round: drift probes + sf1 probe.
+"""Bench plumbing the driver runs per-round: drift probes, the envelope
+rule, the sf1 probe and the compact line.
 
 bench.py's per-class drift probes and the sf1 scaling probe execute only
 inside the driver's bench run, so a wiring break would surface as a
@@ -8,28 +9,53 @@ sf0.001 (seconds, not the sf0.1 minutes the real bench pays).
 
 from __future__ import annotations
 
+import json
+import statistics
+from pathlib import Path
+
 import pytest
 
 import bench
 
 SF_DIR = "/root/testdata/sf0.001"
+ROOT = Path(bench.__file__).resolve().parent
 
 
 def test_class_probes_return_positive_walls(spark):
     walls = bench.run_class_probes(spark, SF_DIR)
-    assert set(walls) == {"shuffle", "cpu"}
+    assert set(walls) == set(bench.PROBE_ANCHOR) == {"shuffle", "cpu"}
     assert all(isinstance(v, float) and v > 0 for v in walls.values())
 
 
-def test_drift_class_covers_every_reference_query():
-    """Every query with an r1/r4 reference must have a drift class, or
-    the class-median normalization silently falls back to the global
-    median for it."""
-    referenced = set(bench.R1_BASELINE) | set(bench.R4_REFERENCE)
-    missing = referenced - set(bench.DRIFT_CLASS)
-    assert not missing, f"reference queries without a drift class: {missing}"
-    assert set(bench.DRIFT_CLASS.values()) == {"shuffle", "cpu"}
-    assert set(bench.PROBE_ANCHOR) == {"shuffle", "cpu"}
+SYNTH_ANCHORS = {"a": 1.0, "b": 2.0, "c": 0.5, "d": 4.0}
+
+
+def _drifted(k: float, **walls: float) -> dict[str, float]:
+    """Every synthetic query at k x its anchor, overridden by ``walls``."""
+    return {**{n: k * a for n, a in SYNTH_ANCHORS.items()}, **walls}
+
+
+def test_envelope_passes_uniform_host_drift():
+    env = bench.envelope(_drifted(3.0), SYNTH_ANCHORS)
+    assert env["ok"] and env["median"] == 3.0 and env["violators"] == []
+
+
+def test_envelope_fails_one_query_past_twice_the_median():
+    env = bench.envelope(_drifted(1.0, b=2.5 * 2.0), SYNTH_ANCHORS)
+    assert not env["ok"] and env["violators"] == ["b"]
+    # 2x the median is still inside the envelope
+    assert bench.envelope(_drifted(1.0, b=2.0 * 2.0), SYNTH_ANCHORS)["ok"]
+
+
+def test_envelope_caps_raw_ratio_even_under_uniform_drift():
+    env = bench.envelope(_drifted(4.5), SYNTH_ANCHORS)
+    assert not env["ok"] and sorted(env["violators"]) == sorted(SYNTH_ANCHORS)
+    assert bench.envelope(_drifted(4.0), SYNTH_ANCHORS)["ok"]
+
+
+def test_envelope_ignores_unanchored_queries():
+    env = bench.envelope(_drifted(1.0, unanchored=1000.0), SYNTH_ANCHORS)
+    assert env["ok"] and "unanchored" not in env["ratios"]
 
 
 @pytest.mark.slow  # full-tier: `make test-full` (r16 two-tier split)
@@ -60,22 +86,17 @@ def test_compact_line_fits_driver_tail_window():
     """The driver parses bench's LAST stdout line from a 2000-byte tail;
     build_compact_line must stay under that against the committed full
     artifact (and degrade by dropping per-query detail, never clipping)."""
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "..", "bench_full_latest.json")
-    full = json.load(open(path))
+    full = json.loads((ROOT / "bench_full_latest.json").read_text())
     line = bench.build_compact_line(full)
     assert len(line) < 2000, len(line)
     parsed = json.loads(line)
+    for key in ("metric", "value", "unit", "queries", "sf", "envelope_ok"):
+        assert key in parsed, key
     assert parsed["metric"] == "headline_queries_total_wall"
-    assert "e2e_1m_pinned_r13_ops_per_sec" in parsed
-    # app-mode 1M pin (tools/app_load.py): must ride along with the rig pin
-    # and carry its vs-rig ratio so the compact line proves the composed
-    # entrypoint holds rig throughput
-    assert parsed["app_1m_pinned_r14_ops_per_sec"] == bench.APP_SCALE_1M["value"]
-    assert parsed["app_1m_pinned_r14_vs_rig"] == bench.APP_SCALE_1M["vs_rig_ratio"]
     assert "sf1_exponent_max" in parsed
+    # the committed artifact's verdict is the envelope rule on its own walls
+    env = bench.envelope(full["queries"], bench.ANCHORS)
+    assert parsed["envelope_ok"] == env["ok"]
     # degradation path: an absurdly wide queries dict still fits
     wide = dict(full, queries={f"q{i:03d}_padpadpad": 1.234 for i in range(200)})
     line2 = bench.build_compact_line(wide)
@@ -84,24 +105,15 @@ def test_compact_line_fits_driver_tail_window():
 
 
 def test_r14_anchor_matches_committed_provenance():
-    """bench.R14_ANCHOR is the pinned copy of ANCHORS_R14.json (the
-    committed measurement artifact with full provenance); the two must
-    never drift, and the anchored set must be exactly the r1+r4
-    reference-tracked queries so no headline query silently loses its
-    honest current-profile reading."""
-    import json
-    from pathlib import Path
-
-    doc = json.loads(
-        (Path(bench.__file__).resolve().parent / "ANCHORS_R14.json").read_text()
-    )
+    """bench.ANCHORS is loaded from ANCHORS_R14.json, the committed
+    measurement with full provenance; every anchor is the median of its
+    three committed rep-mins, and every anchored query is a headline
+    query (an anchor for a query bench never times gates nothing)."""
+    doc = json.loads((ROOT / "ANCHORS_R14.json").read_text())
     assert doc["_provenance"]["measured_round"] == 14
     assert doc["_provenance"]["solo"] is True
     committed = {n: a["anchor_sec"] for n, a in doc["anchors"].items()}
-    assert committed == bench.R14_ANCHOR
-    assert set(bench.R14_ANCHOR) == set(bench.R1_BASELINE) | set(bench.R4_REFERENCE)
-    # each anchor is the median of its three committed rep-mins
+    assert bench.ANCHORS == committed
     for n, a in doc["anchors"].items():
-        import statistics
-
         assert a["anchor_sec"] == round(statistics.median(a["rep_mins"]), 3), n
+    assert set(bench.ANCHORS) <= set(bench.HEADLINE)

@@ -56,6 +56,25 @@ def test_reliable_branch_writes_checkpoint_files(spark, clean_env, monkeypatch):
     )
 
 
+def test_reliable_branch_rebinds_when_ckpt_dir_changes(
+    spark, clean_env, monkeypatch
+):
+    """Each reliable ckpt call checkpoints under the BCS_CKPT_DIR current
+    at that call, not under whichever dir the first call bound."""
+    monkeypatch.setenv("BCS_RELIABLE_CKPT", "1")
+    for sub in ("first", "second"):
+        ckpt_dir = clean_env / sub
+        monkeypatch.setenv("BCS_CKPT_DIR", str(ckpt_dir))
+        out = spark.range(50).transform(ckpt)
+        assert out.count() == 50
+        assert [f for _, _, fs in os.walk(ckpt_dir) for f in fs], sub
+
+
+def test_get_spark_cleans_reliable_checkpoints(spark):
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+
+
 def test_both_branches_agree_through_a_query_shaped_pipeline(
     spark, clean_env, monkeypatch
 ):

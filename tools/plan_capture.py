@@ -1,8 +1,8 @@
-"""Capture `.explain("formatted")` for headline queries into plans/r16/.
+"""Capture `.explain("formatted")` for headline queries into plans/r<round>/.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/plan_capture_r16.py before [names...]
-    PYTHONPATH=/root/repo python tools/plan_capture_r16.py after  [names...]
+    PYTHONPATH=/root/repo python tools/plan_capture.py <round> before [names...]
+    PYTHONPATH=/root/repo python tools/plan_capture.py <round> after  [names...]
 
 With no names, captures every bench.HEADLINE query. The formatted plan is
 the PRE-EXECUTION plan (AdaptiveSparkPlan isFinalPlan=false) — the shape
@@ -29,11 +29,14 @@ def main() -> int:
     from better_cdc_spark.queries import load_all
     from better_cdc_spark.session import get_spark
 
-    suffix = sys.argv[1] if len(sys.argv) > 1 else "before"
-    names = sys.argv[2:] or HEADLINE
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        sys.exit(__doc__)
+    rnd, suffix = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or HEADLINE
     registry = load_all()
-    spark = get_spark("plan-capture-r16", cpus=8)
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16")
+    spark = get_spark(f"plan-capture-r{rnd}", cpus=8)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out_dir = os.path.join(repo, "plans", f"r{rnd}")
     os.makedirs(out_dir, exist_ok=True)
 
     for name in names:

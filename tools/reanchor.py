@@ -1,8 +1,7 @@
-"""Re-anchor the drift-tracked headline queries on the CURRENT VM profile
-(r13 verdict item 1, option a): the r1/r4 anchors are nine-plus rounds and
-several VM-profile shifts old, and q97h_bm25_topk's class-normalized ratio
-crept upward for three rounds on byte-identical code — anchor rot, not a
-plan defect (the committed r13 plan pin shows the intended shape).
+"""Re-anchor the envelope-tracked headline queries on the CURRENT host
+profile: anchors age as the host profile shifts (q97h_bm25_topk's
+normalized ratio crept upward for three rounds on byte-identical code —
+anchor rot, not a plan defect).
 
 Method — matches bench.py's headline convention exactly so anchor and
 future measurement are the same experiment:
@@ -11,9 +10,8 @@ future measurement are the same experiment:
   * the whole pass repeated in R=3 INDEPENDENT JVMs (fresh SparkSession
     per rep); the committed anchor is the MEDIAN of the three min-of-3
     walls, so one hot/cold rep cannot set the anchor
-Writes ANCHORS_R14.json (committed with provenance); bench.py pins the
-resulting dict as R14_ANCHOR. The r1/r4 series stays in bench.py and
-PLANS.md for history.
+Rewrites ANCHORS_R14.json (committed with provenance) for the queries it
+already anchors; bench.py loads its anchors from that file at import.
 
 Run: PYTHONPATH=. python tools/reanchor.py [sf_dir]  (SOLO — no other
 Spark session may run concurrently or walls crater 3-8x.)
@@ -30,15 +28,7 @@ from pathlib import Path
 
 REPO = Path(__file__).resolve().parents[1]
 
-# The anchor-tracked set, derived from bench.py's reference dicts (NOT a
-# hand-copy): a future round that adds a headline query to R1_BASELINE /
-# R4_REFERENCE is automatically measured on the next reanchor run, and
-# test_r14_anchor_matches_committed_provenance keeps the committed JSON
-# honest against the same source of truth.
-sys.path.insert(0, str(REPO))
-import bench  # noqa: E402
-
-ANCHORED = sorted(set(bench.R1_BASELINE) | set(bench.R4_REFERENCE))
+ANCHORS_PATH = REPO / "ANCHORS_R14.json"
 
 _REP_SNIPPET = r"""
 import json, sys, time
@@ -64,10 +54,13 @@ print("ANCHOR_REP " + json.dumps(out))
 
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
+    # The anchored set is the committed file's own keys: adding a headline
+    # query to the envelope means adding its key there and re-running this.
+    anchored = sorted(json.loads(ANCHORS_PATH.read_text())["anchors"])
     reps: list[dict[str, float]] = []
     for rep in range(3):
         proc = subprocess.run(
-            [sys.executable, "-c", _REP_SNIPPET, sf_dir, json.dumps(ANCHORED)],
+            [sys.executable, "-c", _REP_SNIPPET, sf_dir, json.dumps(anchored)],
             capture_output=True, text=True, timeout=1800,
             env={**os.environ, "PYTHONPATH": str(REPO)}, cwd=str(REPO),
         )
@@ -89,7 +82,7 @@ def main() -> int:
             "anchor_sec": round(statistics.median(r[n] for r in reps), 3),
             "rep_mins": [r[n] for r in reps],
         }
-        for n in ANCHORED
+        for n in anchored
     }
     doc = {
         "_provenance": {
@@ -102,9 +95,8 @@ def main() -> int:
         },
         "anchors": anchors,
     }
-    out_path = REPO / "ANCHORS_R14.json"
-    out_path.write_text(json.dumps(doc, indent=2) + "\n")
-    print(f"wrote {out_path}")
+    ANCHORS_PATH.write_text(json.dumps(doc, indent=2) + "\n")
+    print(f"wrote {ANCHORS_PATH}")
     for n, a in anchors.items():
         print(f"  {n}: {a['anchor_sec']} {a['rep_mins']}")
     return 0

@@ -3,10 +3,10 @@
 The bench's run_sf1_scaling fabricates a 10x constant-dup-density corpus in
 a temp dir and deletes it; optimization A/Bs need the same corpus to live
 across sessions so old/new query forms can be timed against identical
-bytes. This writes documents.parquet + embeddings.parquet with the exact
-amplification scheme bench._run_sf1_scaling_at uses, plus symlinks for the
-remaining sf0.1 tables so registry queries that read lineitem/orders/etc.
-still resolve.
+bytes. This writes documents.parquet + embeddings.parquet with
+amplify_documents (the function the bench calls), plus orders/events
+copies and symlinks for the remaining sf0.1 tables so registry queries that
+read lineitem/orders/etc. still resolve.
 
     PYTHONPATH=/root/repo python tools/sf1_corpus.py /tmp/bcs_sf1_ab
 
@@ -20,20 +20,28 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+N_COPIES = 10
 
-def main() -> int:
+
+def amplify_documents(spark, sf_dir: str, out_dir: str) -> None:
+    """Write documents.parquet and embeddings.parquet under ``out_dir`` as
+    N_COPIES replicas of the ``sf_dir`` tables (doc_id/vec_id offset by
+    copy * 1_000_000).
+
+    Constant dup DENSITY, like a real bigger corpus: copy 0 is the
+    original, copy 1 an exact dup (10% exact-dup rate), copies 2-9 mutate
+    every 3rd token with a copy-specific suffix — cross-copy cosine/Jaccard
+    drops below near-dup thresholds, so the true near-dup pair count grows
+    LINEARLY with the corpus. (Naive prefix-only mutation gives every doc 9
+    genuine near-twins; the output itself is then quadratic and the probe
+    can't distinguish algorithmic blowup from output growth.)
+    """
     from pyspark.sql import functions as F
 
     from better_cdc_spark.io import load_table
-    from better_cdc_spark.session import get_spark
 
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/bcs_sf1_ab"
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark("sf1-corpus")
-
+    copies = spark.range(N_COPIES).select(F.col("id").alias("copy"))
     docs = load_table(spark, sf_dir, "documents")
-    n_copies = 10
     toks = F.split(F.col("text"), " ")
     mutated = F.array_join(
         F.zip_with(
@@ -47,7 +55,7 @@ def main() -> int:
         " ",
     )
     amplified = (
-        docs.crossJoin(spark.range(n_copies).select(F.col("id").alias("copy")))
+        docs.crossJoin(copies)
         .select(
             (F.col("doc_id") + F.col("copy") * 1_000_000).alias("doc_id"),
             F.when(F.col("copy") <= 1, F.col("text")).otherwise(mutated).alias("text"),
@@ -62,9 +70,12 @@ def main() -> int:
         f"{out_dir}/documents.parquet"
     )
 
+    # embeddings, same constant-density scheme (q96d/q94d read them):
+    # copy 1 is an exact dup, copies 2-9 perturb one copy-dependent
+    # dimension so cross-copy cosine leaves near-dup range
     emb = load_table(spark, sf_dir, "embeddings")
     emb_amp = (
-        emb.crossJoin(spark.range(n_copies).select(F.col("id").alias("copy")))
+        emb.crossJoin(copies)
         .select(
             (F.col("vec_id") + F.col("copy") * 1_000_000).alias("vec_id"),
             F.when(F.col("copy") <= 1, F.col("embedding"))
@@ -85,10 +96,24 @@ def main() -> int:
         f"{out_dir}/embeddings.parquet"
     )
 
+
+def main() -> int:
+    from pyspark.sql import functions as F
+
+    from better_cdc_spark.io import load_table
+    from better_cdc_spark.session import get_spark
+
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/bcs_sf1_ab"
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    os.makedirs(out_dir, exist_ok=True)
+    spark = get_spark("sf1-corpus")
+
+    amplify_documents(spark, sf_dir, out_dir)
+
     # orders ×10 (distinct keys per copy) — for the qc01 changelog A/B
     orders = load_table(spark, sf_dir, "orders")
     orders_amp = orders.crossJoin(
-        spark.range(n_copies).select(F.col("id").alias("copy"))
+        spark.range(N_COPIES).select(F.col("id").alias("copy"))
     ).select(
         (F.col("o_orderkey") + F.col("copy") * 100_000_000).alias("o_orderkey"),
         *[c for c in orders.columns if c != "o_orderkey"],
@@ -100,7 +125,7 @@ def main() -> int:
     # events ×10 (distinct users/events per copy) — for the q48 bitmap A/B
     events = spark.read.parquet(f"{sf_dir}/events.parquet")
     events_amp = events.crossJoin(
-        spark.range(n_copies).select(F.col("id").alias("copy"))
+        spark.range(N_COPIES).select(F.col("id").alias("copy"))
     ).select(
         *[
             (F.col("user_id") + F.col("copy") * 10_000_000).alias("user_id")
