@@ -1,8 +1,10 @@
 """Capture `.explain("formatted")` for headline queries into plans/r<round>/.
 
 Usage:
-    PYTHONPATH=/root/repo python tools/plan_capture.py <round> before [names...]
-    PYTHONPATH=/root/repo python tools/plan_capture.py <round> after  [names...]
+    PYTHONPATH=. python tools/plan_capture.py <round> before [names...]
+    PYTHONPATH=. python tools/plan_capture.py <round> after  [names...]
+
+Run from the repository root.
 
 With no names, captures every bench.HEADLINE query. The formatted plan is
 the PRE-EXECUTION plan (AdaptiveSparkPlan isFinalPlan=false) — the shape
