@@ -70,8 +70,34 @@ ROLLING_HASH_INIT = 7
 ROLLING_HASH_MULT = 31
 
 
-def _int_array_sql(xs: list[int]) -> str:
-    return "array(" + ",".join(f"{x}L" for x in xs) + ")"
+def array_literal_sql(values: Sequence) -> str:
+    """SQL text of a (nested) numeric array literal, exact per element.
+
+    Ints become BIGINT (``5L``); everything else becomes DOUBLE from the
+    shortest round-trip ``repr`` (``0.1D``, ``1e-05D``, ``-0.0D``), which
+    Spark's parser reads back to the same bits. NaN and ±inf have no such
+    literal and raise ValueError.
+    """
+    parts = []
+    for v in values:
+        if isinstance(v, (list, tuple)):
+            parts.append(array_literal_sql(v))
+        elif isinstance(v, int):
+            parts.append(f"{v}L")
+        else:
+            x = float(v)
+            if not np.isfinite(x):
+                raise ValueError(f"no exact SQL literal for {x!r}")
+            parts.append(f"{x!r}D")
+    return "array(" + ", ".join(parts) + ")"
+
+
+def array_literal(values: Sequence) -> F.Column:
+    """A per-element model array (centroids, bloom words, pinned tables)
+    as ONE parsed literal: a single py4j call, where ``F.array`` over
+    ``F.lit``s pays one per element (512 for a k=8, dim=64 model). The
+    optimized plan is the same folded array constant."""
+    return F.expr(array_literal_sql(values))
 
 
 # ---------------------------------------------------------------------------
@@ -114,8 +140,8 @@ def minhash_signature(shingles_expr: str = "shingles") -> F.Column:
     is `minhash_signatures`, which computes identical values through a
     hash-aggregate that codegens and partially aggregates map-side.
     """
-    a = _int_array_sql(PERM_A)
-    b = _int_array_sql(PERM_B)
+    a = array_literal_sql(PERM_A)
+    b = array_literal_sql(PERM_B)
     return F.expr(
         f"""transform(sequence(0, {MINHASH_PERMS - 1}), i ->
               aggregate(
@@ -668,7 +694,7 @@ def bloom_probe(
     array — element_at + dynamic shiftright + bitwiseAND — so membership
     against the benchmark costs zero joins and zero shuffle at any scale.
     """
-    arr = F.array(*[F.lit(int(w)) for w in bits])
+    arr = array_literal([int(w) for w in bits])
 
     def bit_set(pos: F.Column) -> F.Column:
         word = F.element_at(arr, (pos / F.lit(64)).cast("int") + F.lit(1))
@@ -716,7 +742,7 @@ def nearest_centroid(centroids: "Sequence[Sequence[float]]", vec: str | F.Column
     # faster locally but was REJECTED: it turns the assignment into
     # k×corpus shuffled rows per iteration — the wrong trade at the
     # 100 TB target this projection exists for.
-    arr = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in centroids])
+    arr = array_literal([[float(x) for x in c] for c in centroids])
     return F.array_min(
         F.transform(
             arr,
@@ -778,7 +804,7 @@ def hyperplane_bucket(vec_expr: str = "v") -> F.Column:
     """
     bits = []
     for p, plane in enumerate(_HYPERPLANES):
-        arr = "array(" + ",".join(f"{x!r}D" for x in plane) + ")"
+        arr = array_literal_sql(plane)
         bits.append(
             f"(CASE WHEN aggregate(zip_with({vec_expr}, {arr}, (x,y) -> x*y), "
             f"0.0D, (acc,v) -> acc+v) > 0 THEN {1 << p} ELSE 0 END)"

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from better_cdc_spark.io import load_table
+from better_cdc_spark.llmops import array_literal
 from better_cdc_spark.queries import query
 from better_cdc_spark.session import ckpt, tune_for_oracle
 
@@ -15691,8 +15692,8 @@ def q44m_circular_hour_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.hour("ts").cast("long").alias("h"))
         .agg(F.count("*").cast("long").alias("c"))
     )
-    cos_arr = F.array(*[F.lit(v) for v in _COS24])
-    sin_arr = F.array(*[F.lit(v) for v in _SIN24])
+    cos_arr = array_literal(_COS24)
+    sin_arr = array_literal(_SIN24)
     trig = hh.select(
         "h",
         "c",

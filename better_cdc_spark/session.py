@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from better_cdc_spark.io import NANOS_AS_LONG
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
 
@@ -36,6 +38,11 @@ def get_spark(app_name: str = "better_cdc_spark", cpus: int | None = None) -> Sp
         # reliable-mode ckpt files (BCS_RELIABLE_CKPT=1) are deleted once
         # their frame is garbage collected instead of piling up unbounded
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # Janino-compiled codegen classes are cached by source; Spark's
+        # default 100 entries is below one query_mix pass (~208 classes),
+        # so every warm pass recompiled all of them and the JIT then
+        # compiled each new class again, thrashing the JVM code cache.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -89,9 +96,13 @@ def tune_for_oracle(spark: SparkSession) -> SparkSession:
     even under a driver-provided session: UTC timestamps (DuckDB timestamps
     are UTC-naive) and ANSI mode as shipped by Spark 4. Also resets the
     per-query tuning knobs (tune_cpu_bound) so queries don't leak config
-    into each other.
+    into each other, and pins ``nanosAsLong`` on: events.ts may be
+    TIMESTAMP(NANOS), which only reads under it, and a session-wide value
+    that never changes keeps io.read_parquet's schema memo (keyed on it)
+    warm for every table.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set(NANOS_AS_LONG, "true")
     spark.conf.set(_ADVISORY_KEY, _ADVISORY_DEFAULT)
     return spark
 

@@ -21,14 +21,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from better_cdc_spark.io import NANOS_AS_LONG, read_parquet
 from better_cdc_spark.session import ckpt
 
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """The schema the file-stream source must declare: whatever a batch scan
     of events.parquet yields (ts arrives as raw nano-long or TIMESTAMP
     depending on the driver's generator; see io.events_ts_to_timestamp)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    spark.conf.set(NANOS_AS_LONG, "true")
+    return read_parquet(spark, f"{sf_dir}/events.parquet").schema
 
 
 def _src_key(sf_dir: str) -> str:
@@ -78,7 +79,7 @@ def _staged_events_split_dir(spark: SparkSession, sf_dir: str, n_files: int) -> 
     d = os.path.join(tempfile.gettempdir(), f"bcs_events_split{n_files}_{key}")
     marker = os.path.join(d, "_SPLIT_DONE")
     if not os.path.exists(marker):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set(NANOS_AS_LONG, "true")
         spark.read.parquet(f"{sf_dir}/events.parquet").repartition(n_files).write.mode(
             "overwrite"
         ).parquet(d)
