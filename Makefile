@@ -39,13 +39,14 @@ pkg-smoke:
 	$(PYTHON) tools/pkg_smoke.py
 
 ## test-smoke: fast non-Spark-heavy suite slice (~1-2 min); includes the
-## bench wiring (probes, envelope rule, compact line) and the query-layer
-## round-trip pins (schema memo, q96e job count) so a break shows here
+## bench wiring (probes, envelope rule, compact line), the query-layer
+## round-trip pins (schema memo, q96e job count) and the shared query
+## fragments (Spark builder vs oracle CTE) so a break shows here
 test-smoke:
 	$(PYTHON) -m pytest -q tests/test_rotation.py tests/test_health.py \
 	  tests/test_dashboard.py tests/test_metrics.py tests/test_config.py \
 	  tests/test_logging_setup.py tests/test_plans.py tests/test_bench_probes.py \
-	  tests/test_query_roundtrips.py
+	  tests/test_query_roundtrips.py tests/test_query_fragments.py
 
 ## perfbench-test: the repository benchmark's own tests (generators,
 ## event-log parser, spans, timed plan; ~20 s)

@@ -1432,6 +1432,13 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
+def lower_words() -> F.Column:
+    """The corpus tokenizer: the ``text`` column lowercased and split on
+    single spaces (empty tokens kept). The DuckDB oracles spell it
+    ``string_split(lower(text), ' ')``."""
+    return F.split(F.lower("text"), " ")
+
+
 def bm25_postings(docs: DataFrame, qterms: DataFrame):
     """Shared postings pass for query-vocabulary-bounded lexical scoring
     (q97h BM25, q97i RRF, tools/scale_probe.py): returns
@@ -1447,7 +1454,7 @@ def bm25_postings(docs: DataFrame, qterms: DataFrame):
     - dfreq: per-term document frequency over tf.
     """
     words = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "doc_id", F.explode(lower_words()).alias("w")
     )
     dl = words.groupBy("doc_id").agg(F.count("*").alias("dl"))
     stats = dl.agg(

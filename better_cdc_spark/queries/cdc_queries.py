@@ -24,6 +24,7 @@ from better_cdc_spark.cdc.dlq import route_failures
 from better_cdc_spark.cdc.normalize import typed_projection
 from better_cdc_spark.io import load_table
 from better_cdc_spark.queries import query
+from better_cdc_spark.scratch import scratch_dir
 from better_cdc_spark.session import ckpt, tune_for_oracle
 
 ALLOWLIST = ["public.orders", "public.accounts"]
@@ -74,6 +75,68 @@ WITH base AS (
   FROM filtered
 )
 """
+
+
+# The multi-version order changelog qc05-qc14 fold: every key's status and
+# cents at wave `first`, every 4th key again at wave `last`; a key's last
+# version carries a 60/30/10 INSERT/UPDATE/DELETE op, earlier ones INSERT.
+# Columns: id, status, total_cents, operation, commit_seq.
+_ORACLE_VERSIONS = """
+    WITH base AS (
+      SELECT o_orderkey AS id, o_orderstatus AS status,
+             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
+      FROM orders
+    ), versions AS (
+      SELECT b.id,
+             b.status || '-' || CAST(t.v AS VARCHAR) AS status,
+             b.cents + t.v AS total_cents,
+             CASE WHEN t.v < CASE WHEN b.id % 4 = 0 THEN {last} ELSE {first} END THEN 'INSERT'
+                  WHEN b.id % 10 < 6 THEN 'INSERT'
+                  WHEN b.id % 10 < 9 THEN 'UPDATE'
+                  ELSE 'DELETE' END AS operation,
+             t.v AS commit_seq
+      FROM base b JOIN (VALUES ({first}), ({last})) AS t(v)
+        ON t.v = {first} OR b.id % 4 = 0
+    ),"""
+
+
+def _order_versions(
+    spark: SparkSession, sf_dir: str, waves: tuple[int, int]
+) -> tuple[DataFrame, DataFrame]:
+    """(base, changes): ``base`` is orders as (id, status, cents) and
+    ``changes`` the changelog _ORACLE_VERSIONS derives, for the wave
+    pair ``waves`` = (first, last)."""
+    first, last = waves
+    orders = load_table(spark, sf_dir, "orders")
+    base = orders.select(
+        F.col("o_orderkey").alias("id"),
+        F.col("o_orderstatus").alias("status"),
+        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
+    )
+    two_versions = F.col("id") % 4 == 0
+    versions = base.select(
+        "*",
+        F.explode(
+            F.when(two_versions, F.array(F.lit(first), F.lit(last))).otherwise(
+                F.array(F.lit(first))
+            )
+        ).alias("v"),
+    )
+    last_v = F.when(two_versions, F.lit(last)).otherwise(F.lit(first))
+    op = (
+        F.when(F.col("v") < last_v, "INSERT")
+        .when(F.col("id") % 10 < 6, "INSERT")
+        .when(F.col("id") % 10 < 9, "UPDATE")
+        .otherwise("DELETE")
+    )
+    changes = versions.select(
+        "id",
+        F.concat_ws("-", "status", F.col("v").cast("string")).alias("status"),
+        (F.col("cents") + F.col("v")).alias("total_cents"),
+        op.alias("operation"),
+        F.col("v").alias("commit_seq"),
+    )
+    return base, changes
 
 
 def _normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -215,23 +278,9 @@ def qc03_dlq_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "qc05_merge_apply",
-    oracle="""
-    WITH base AS (
-      SELECT o_orderkey AS id, o_orderstatus AS status,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-      FROM orders
-    ), versions AS (
-      SELECT b.id,
-             b.status || '-' || CAST(t.v AS VARCHAR) AS status,
-             b.cents + t.v AS total_cents,
-             CASE WHEN t.v < CASE WHEN b.id % 4 = 0 THEN 2 ELSE 1 END THEN 'INSERT'
-                  WHEN b.id % 10 < 6 THEN 'INSERT'
-                  WHEN b.id % 10 < 9 THEN 'UPDATE'
-                  ELSE 'DELETE' END AS operation,
-             t.v AS commit_seq
-      FROM base b JOIN (VALUES (1), (2)) AS t(v)
-        ON t.v = 1 OR b.id % 4 = 0
-    ), latest AS (
+    oracle=_ORACLE_VERSIONS.format(first=1, last=2)
+    + """
+    latest AS (
       SELECT id, status, total_cents, operation
       FROM versions
       QUALIFY ROW_NUMBER() OVER (PARTITION BY id ORDER BY commit_seq DESC) = 1
@@ -258,39 +307,11 @@ def qc05_merge_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass-through untouched rows in one plan.
     """
     tune_for_oracle(spark)
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
+    base, changes = _order_versions(spark, sf_dir, (1, 2))
     snapshot = base.filter(F.col("id") % 2 == 0).select(
         "id",
         F.lit("SNAP").alias("status"),
         F.lit(0).cast("long").alias("total_cents"),
-    )
-    two_versions = F.col("id") % 4 == 0
-    versions = base.select(
-        "*",
-        F.explode(
-            F.when(two_versions, F.array(F.lit(1), F.lit(2))).otherwise(
-                F.array(F.lit(1))
-            )
-        ).alias("v"),
-    )
-    last_v = F.when(two_versions, F.lit(2)).otherwise(F.lit(1))
-    op = (
-        F.when(F.col("v") < last_v, "INSERT")
-        .when(F.col("id") % 10 < 6, "INSERT")
-        .when(F.col("id") % 10 < 9, "UPDATE")
-        .otherwise("DELETE")
-    )
-    changes = versions.select(
-        "id",
-        F.concat_ws("-", "status", F.col("v").cast("string")).alias("status"),
-        (F.col("cents") + F.col("v")).alias("total_cents"),
-        op.alias("operation"),
-        F.col("v").alias("commit_seq"),
     )
     return apply_changelog(
         snapshot, changes, keys="id", order_col="commit_seq", broadcast_changes=True
@@ -326,23 +347,9 @@ def qc04_event_id_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "qc06_scd2",
-    oracle="""
-    WITH base AS (
-      SELECT o_orderkey AS id, o_orderstatus AS status,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-      FROM orders
-    ), versions AS (
-      SELECT b.id,
-             b.status || '-' || CAST(t.v AS VARCHAR) AS status,
-             b.cents + t.v AS total_cents,
-             CASE WHEN t.v < CASE WHEN b.id % 4 = 0 THEN 2 ELSE 1 END THEN 'INSERT'
-                  WHEN b.id % 10 < 6 THEN 'INSERT'
-                  WHEN b.id % 10 < 9 THEN 'UPDATE'
-                  ELSE 'DELETE' END AS operation,
-             t.v AS commit_seq
-      FROM base b JOIN (VALUES (1), (2)) AS t(v)
-        ON t.v = 1 OR b.id % 4 = 0
-    ), closed AS (
+    oracle=_ORACLE_VERSIONS.format(first=1, last=2)
+    + """
+    closed AS (
       SELECT *,
              LEAD(commit_seq) OVER (PARTITION BY id ORDER BY commit_seq) AS valid_to
       FROM versions
@@ -366,35 +373,7 @@ def qc06_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     share the exchange+sort (WindowExec x2, zero extra exchanges).
     """
     tune_for_oracle(spark)
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
-    two_versions = F.col("id") % 4 == 0
-    versions = base.select(
-        "*",
-        F.explode(
-            F.when(two_versions, F.array(F.lit(1), F.lit(2))).otherwise(
-                F.array(F.lit(1))
-            )
-        ).alias("v"),
-    )
-    last_v = F.when(two_versions, F.lit(2)).otherwise(F.lit(1))
-    op = (
-        F.when(F.col("v") < last_v, "INSERT")
-        .when(F.col("id") % 10 < 6, "INSERT")
-        .when(F.col("id") % 10 < 9, "UPDATE")
-        .otherwise("DELETE")
-    )
-    changes = versions.select(
-        "id",
-        F.concat_ws("-", "status", F.col("v").cast("string")).alias("status"),
-        (F.col("cents") + F.col("v")).alias("total_cents"),
-        op.alias("operation"),
-        F.col("v").alias("commit_seq"),
-    )
+    _, changes = _order_versions(spark, sf_dir, (1, 2))
     from better_cdc_spark.cdc import scd2_history
 
     return scd2_history(changes, keys="id", order_col="commit_seq")
@@ -402,23 +381,9 @@ def qc06_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "qc07_snapshot_at",
-    oracle="""
-    WITH base AS (
-      SELECT o_orderkey AS id, o_orderstatus AS status,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-      FROM orders
-    ), versions AS (
-      SELECT b.id,
-             b.status || '-' || CAST(t.v AS VARCHAR) AS status,
-             b.cents + t.v AS total_cents,
-             CASE WHEN t.v < CASE WHEN b.id % 4 = 0 THEN 2 ELSE 1 END THEN 'INSERT'
-                  WHEN b.id % 10 < 6 THEN 'INSERT'
-                  WHEN b.id % 10 < 9 THEN 'UPDATE'
-                  ELSE 'DELETE' END AS operation,
-             t.v AS commit_seq
-      FROM base b JOIN (VALUES (1), (2)) AS t(v)
-        ON t.v = 1 OR b.id % 4 = 0
-    ), hist AS (
+    oracle=_ORACLE_VERSIONS.format(first=1, last=2)
+    + """
+    hist AS (
       SELECT * FROM versions WHERE commit_seq <= 1
     ), latest AS (
       SELECT id, status, total_cents, operation
@@ -440,35 +405,7 @@ def qc07_snapshot_at(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale); reconstruction is one key-shuffle for latest-per-key.
     """
     tune_for_oracle(spark)
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
-    two_versions = F.col("id") % 4 == 0
-    versions = base.select(
-        "*",
-        F.explode(
-            F.when(two_versions, F.array(F.lit(1), F.lit(2))).otherwise(
-                F.array(F.lit(1))
-            )
-        ).alias("v"),
-    )
-    last_v = F.when(two_versions, F.lit(2)).otherwise(F.lit(1))
-    op = (
-        F.when(F.col("v") < last_v, "INSERT")
-        .when(F.col("id") % 10 < 6, "INSERT")
-        .when(F.col("id") % 10 < 9, "UPDATE")
-        .otherwise("DELETE")
-    )
-    changes = versions.select(
-        "id",
-        F.concat_ws("-", "status", F.col("v").cast("string")).alias("status"),
-        (F.col("cents") + F.col("v")).alias("total_cents"),
-        op.alias("operation"),
-        F.col("v").alias("commit_seq"),
-    )
+    _, changes = _order_versions(spark, sf_dir, (1, 2))
     from better_cdc_spark.cdc import snapshot_at
 
     return snapshot_at(changes, "id", "commit_seq", cutoff=1).select(
@@ -653,8 +590,6 @@ def qc11_jetstream_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     (TestJetStreamDedup parity, readme.md:168) and that every event
     routed to its cdc.{db}.{schema}.{table} subject.
     """
-    import tempfile
-
     from better_cdc_spark.streaming.jetstream_shaped import (
         JetStreamShapedSink,
         StreamConfig,
@@ -674,7 +609,7 @@ def qc11_jetstream_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = JetStreamShapedSink(
         spark,
-        tempfile.mkdtemp(prefix="bcs_qc11_"),
+        scratch_dir("qc11_stream"),
         StreamConfig(subjects=("cdc.>",)),
     ).ensure_stream()
     sink.publish(ev)
@@ -737,23 +672,9 @@ def qc12_streaming_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "qc13_snapshot_handoff",
-    oracle="""
-    WITH base AS (
-      SELECT o_orderkey AS id, o_orderstatus AS status,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-      FROM orders
-    ), versions AS (
-      SELECT b.id,
-             b.status || '-' || CAST(t.v AS VARCHAR) AS status,
-             b.cents + t.v AS total_cents,
-             CASE WHEN t.v < CASE WHEN b.id % 4 = 0 THEN 4 ELSE 2 END THEN 'INSERT'
-                  WHEN b.id % 10 < 6 THEN 'INSERT'
-                  WHEN b.id % 10 < 9 THEN 'UPDATE'
-                  ELSE 'DELETE' END AS operation,
-             t.v AS commit_seq
-      FROM base b JOIN (VALUES (2), (4)) AS t(v)
-        ON t.v = 2 OR b.id % 4 = 0
-    ), snap AS (
+    oracle=_ORACLE_VERSIONS.format(first=2, last=4)
+    + """
+    snap AS (
       SELECT id, status, total_cents, 'SNAPSHOT' AS operation, 3 AS commit_seq
       FROM (
         SELECT id, status, total_cents, operation,
@@ -796,35 +717,7 @@ def qc13_snapshot_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast of a 100 TB table).
     """
     tune_for_oracle(spark)
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
-    two_versions = F.col("id") % 4 == 0
-    versions = base.select(
-        "*",
-        F.explode(
-            F.when(two_versions, F.array(F.lit(2), F.lit(4))).otherwise(
-                F.array(F.lit(2))
-            )
-        ).alias("v"),
-    )
-    last_v = F.when(two_versions, F.lit(4)).otherwise(F.lit(2))
-    op = (
-        F.when(F.col("v") < last_v, "INSERT")
-        .when(F.col("id") % 10 < 6, "INSERT")
-        .when(F.col("id") % 10 < 9, "UPDATE")
-        .otherwise("DELETE")
-    )
-    changes = versions.select(
-        "id",
-        F.concat_ws("-", "status", F.col("v").cast("string")).alias("status"),
-        (F.col("cents") + F.col("v")).alias("total_cents"),
-        op.alias("operation"),
-        F.col("v").alias("commit_seq"),
-    )
+    _, changes = _order_versions(spark, sf_dir, (2, 4))
     from better_cdc_spark.cdc.apply import snapshot_at as snap_fold
 
     snapshot = snap_fold(changes, keys="id", order_col="commit_seq", cutoff=3).select(
@@ -847,23 +740,9 @@ def qc13_snapshot_handoff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "qc14_streaming_scd2",
-    oracle="""
-    WITH base AS (
-      SELECT o_orderkey AS id, o_orderstatus AS status,
-             CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
-      FROM orders
-    ), versions AS (
-      SELECT b.id,
-             b.status || '-' || CAST(t.v AS VARCHAR) AS status,
-             b.cents + t.v AS total_cents,
-             CASE WHEN t.v < CASE WHEN b.id % 4 = 0 THEN 2 ELSE 1 END THEN 'INSERT'
-                  WHEN b.id % 10 < 6 THEN 'INSERT'
-                  WHEN b.id % 10 < 9 THEN 'UPDATE'
-                  ELSE 'DELETE' END AS operation,
-             t.v AS commit_seq
-      FROM base b JOIN (VALUES (1), (2)) AS t(v)
-        ON t.v = 1 OR b.id % 4 = 0
-    ), closed AS (
+    oracle=_ORACLE_VERSIONS.format(first=1, last=2)
+    + """
+    closed AS (
       SELECT *,
              LEAD(commit_seq) OVER (PARTITION BY id ORDER BY commit_seq) AS valid_to
       FROM versions
@@ -893,43 +772,14 @@ def qc14_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, O(batch + touched-history), no global rewrite per epoch.
     """
     import os as _os
-    import tempfile as _tf
 
     from better_cdc_spark.cdc import scd2_apply_increment
 
     tune_for_oracle(spark)
-    orders = load_table(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderkey").alias("id"),
-        F.col("o_orderstatus").alias("status"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
-    )
-    two_versions = F.col("id") % 4 == 0
-    versions = base.select(
-        "*",
-        F.explode(
-            F.when(two_versions, F.array(F.lit(1), F.lit(2))).otherwise(
-                F.array(F.lit(1))
-            )
-        ).alias("v"),
-    )
-    last_v = F.when(two_versions, F.lit(2)).otherwise(F.lit(1))
-    op = (
-        F.when(F.col("v") < last_v, "INSERT")
-        .when(F.col("id") % 10 < 6, "INSERT")
-        .when(F.col("id") % 10 < 9, "UPDATE")
-        .otherwise("DELETE")
-    )
-    changes = versions.select(
-        "id",
-        F.concat_ws("-", "status", F.col("v").cast("string")).alias("status"),
-        (F.col("cents") + F.col("v")).alias("total_cents"),
-        op.alias("operation"),
-        F.col("v").alias("commit_seq"),
-    )
+    _, changes = _order_versions(spark, sf_dir, (1, 2))
 
-    src = _tf.mkdtemp(prefix="bcs_qc14_src_")
-    hist_dir = _os.path.join(_tf.mkdtemp(prefix="bcs_qc14_hist_"), "hist")
+    src = scratch_dir("qc14_src")
+    hist_dir = scratch_dir("qc14_hist")
     # one DETERMINISTICALLY-NAMED file per commit wave: appended writes
     # carry random uuid part names, which name-ordered mtime stamping
     # would scramble ~50% of runs (waves must admit in commit order)
@@ -962,7 +812,7 @@ def qc14_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="bcs_ck_qc14_"))
+        .option("checkpointLocation", scratch_dir("qc14_ck"))
         .start()
     )
     try:
@@ -1076,13 +926,12 @@ def qc16_python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import json as _json
     import os as _os
-    import tempfile as _tf
 
     from better_cdc_spark.datasource import JsonlSinkDataSource
 
     tune_for_oracle(spark)
     spark.dataSource.register(JsonlSinkDataSource)
-    out = _tf.mkdtemp(prefix="bcs_qc16_sink_")
+    out = scratch_dir("qc16_sink")
     orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0)
     slice_df = orders.select(
         "o_orderkey",
@@ -1481,7 +1330,6 @@ def qm03_txlog_acid(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans (pushdown pinned in tests/test_txlog.py); the log itself is
     bounded by commit count, not data size.
     """
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -2098,7 +1946,6 @@ def qm10_change_data_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     log tail (O(commits)); every row read is a distributed scan of
     files the vacuum horizon provably retains.
     """
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -2236,7 +2083,6 @@ def qm11_cdf_downstream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot resolution. This pattern is why a table format carries a
     CDF at all.
     """
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)

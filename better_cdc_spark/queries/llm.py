@@ -535,7 +535,7 @@ def q96i_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = (
         docs.select(
-            "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t")
+            "doc_id", F.explode(llmops.lower_words()).alias("t")
         )
         .filter(F.col("t") != "")
         .select(
@@ -2097,7 +2097,7 @@ def q98_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = F.split(F.col("text"), " ")
-    lower_words = F.split(F.lower(F.col("text")), " ")
+    lower_words = llmops.lower_words()
     stop_arr = F.array(*[F.lit(s) for s in llmops.STOPWORDS])
     n_stop = F.size(F.filter(lower_words, lambda w: F.array_contains(stop_arr, w)))
     n_punct = F.length("text") - F.length(F.regexp_replace("text", llmops.PUNCT_RE, ""))
@@ -2150,7 +2150,7 @@ def q98_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
-    lower_words = F.split(F.lower(F.col("text")), " ")
+    lower_words = llmops.lower_words()
 
     def score(stops: tuple[str, ...]) -> F.Column:
         arr = F.array(*[F.lit(s) for s in stops])
@@ -2601,7 +2601,7 @@ def q98b_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     words = docs.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "doc_id", F.explode(llmops.lower_words()).alias("w")
     )
     freq = words.groupBy("w").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").alias("t"))
@@ -2905,7 +2905,7 @@ def q98c_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     wc = (
-        docs.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word"))
+        docs.select("doc_id", F.explode(llmops.lower_words()).alias("word"))
         .groupBy("doc_id", "word")
         .agg(F.count("*").alias("c"))
     )
@@ -3199,7 +3199,7 @@ def q94f_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    words = docs.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w"))
+    words = docs.select("doc_id", F.explode(llmops.lower_words()).alias("w"))
     freq = words.groupBy("w").agg(F.count("*").alias("c"))
     total = freq.agg(F.sum("c").alias("t"))
     lp = (
@@ -4042,9 +4042,9 @@ def q94e_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q97h_bm25_topk",
-    oracle="""
+# BM25 over the three fixed keyword queries, the DuckDB twin of
+# llmops.bm25_postings (qterms..df) and llmops.bm25_term_score (scored, agg)
+_ORACLE_BM25_POSTINGS = """
     WITH qterms(qid, w) AS (
       VALUES (1,'table'),(1,'scan'),(2,'join'),(2,'hash'),(3,'window'),(3,'agg')
     ),
@@ -4053,14 +4053,17 @@ def q94e_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     dl AS (SELECT doc_id, COUNT(*) AS dl FROM words GROUP BY doc_id),
     stats AS (
-      SELECT COUNT(*) AS n_docs, SUM(dl) * 1.0 / COUNT(*) AS avgdl FROM dl
+      SELECT COUNT(*) AS n_docs, SUM(dl) * 1.0 / COUNT(*) AS avgdl,
+             SUM(dl) AS t FROM dl
     ),
     tf AS (
       SELECT doc_id, w, COUNT(*) AS tf
       FROM words JOIN (SELECT DISTINCT w FROM qterms) USING (w)
       GROUP BY doc_id, w
     ),
-    df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
+    df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),"""
+
+_ORACLE_BM25_SCORED = """
     scored AS (
       SELECT q.qid, t.doc_id,
              CAST(ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
@@ -4073,7 +4076,14 @@ def q94e_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
       JOIN dl USING (doc_id)
       CROSS JOIN stats
     ),
-    agg AS (SELECT qid, doc_id, SUM(s) AS score FROM scored GROUP BY qid, doc_id),
+    agg AS (SELECT qid, doc_id, SUM(s) AS score FROM scored GROUP BY qid, doc_id),"""
+
+
+@query(
+    "q97h_bm25_topk",
+    oracle=_ORACLE_BM25_POSTINGS
+    + _ORACLE_BM25_SCORED
+    + """
     ranked AS (
       SELECT qid, doc_id, score,
              ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
@@ -4135,36 +4145,9 @@ def q97h_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q97t_retrieval_eval",
-    oracle="""
-    WITH qterms(qid, w) AS (
-      VALUES (1,'table'),(1,'scan'),(2,'join'),(2,'hash'),(3,'window'),(3,'agg')
-    ),
-    words AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents
-    ),
-    dl AS (SELECT doc_id, COUNT(*) AS dl FROM words GROUP BY doc_id),
-    stats AS (
-      SELECT COUNT(*) AS n_docs, SUM(dl) * 1.0 / COUNT(*) AS avgdl FROM dl
-    ),
-    tf AS (
-      SELECT doc_id, w, COUNT(*) AS tf
-      FROM words JOIN (SELECT DISTINCT w FROM qterms) USING (w)
-      GROUP BY doc_id, w
-    ),
-    df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-    scored AS (
-      SELECT q.qid, t.doc_id,
-             CAST(ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-                  * (t.tf * 2.2)
-                  / (t.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))
-               AS DECIMAL(18,10)) AS s
-      FROM tf t
-      JOIN qterms q USING (w)
-      JOIN df USING (w)
-      JOIN dl USING (doc_id)
-      CROSS JOIN stats
-    ),
-    agg AS (SELECT qid, doc_id, SUM(s) AS score FROM scored GROUP BY qid, doc_id),
+    oracle=_ORACLE_BM25_POSTINGS
+    + _ORACLE_BM25_SCORED
+    + """
     ranked AS (
       SELECT qid, doc_id,
              ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
@@ -4467,7 +4450,7 @@ def q95o_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "text")
-    words = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    words = F.filter(llmops.lower_words(), lambda x: x != "")
     bigrams = F.when(
         F.size(words) >= 2,
         F.transform(
@@ -4634,7 +4617,7 @@ def q36h_countmin_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("text")
-    words = docs.select(F.explode(F.split(F.lower("text"), " ")).alias("w"))
+    words = docs.select(F.explode(llmops.lower_words()).alias("w"))
     exact = words.groupBy("w").agg(F.count("*").alias("c"))
     stream = words.select("w", F.md5("w").alias("h"))
     rows_ = F.explode(F.array(*[F.lit(r) for r in (0, 1, 2, 3)])).alias("r")
@@ -4737,7 +4720,7 @@ def q98k_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    words = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    words = F.filter(llmops.lower_words(), lambda x: x != "")
     wdf = docs.select("doc_id", words.alias("words"))
     uni = wdf.select(F.explode("words").alias("w1"))
     unic = uni.groupBy("w1").agg(F.count("*").alias("c1"))
@@ -4967,24 +4950,8 @@ def q95p_dup_span_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q97i_rrf_hybrid",
-    oracle="""
-    WITH qterms(qid, w) AS (
-      VALUES (1,'table'),(1,'scan'),(2,'join'),(2,'hash'),(3,'window'),(3,'agg')
-    ),
-    words AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents
-    ),
-    dl AS (SELECT doc_id, COUNT(*) AS dl FROM words GROUP BY doc_id),
-    stats AS (
-      SELECT COUNT(*) AS n_docs, SUM(dl) * 1.0 / COUNT(*) AS avgdl,
-             SUM(dl) AS t FROM dl
-    ),
-    tf AS (
-      SELECT doc_id, w, COUNT(*) AS tf
-      FROM words JOIN (SELECT DISTINCT w FROM qterms) USING (w)
-      GROUP BY doc_id, w
-    ),
-    df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
+    oracle=_ORACLE_BM25_POSTINGS
+    + """
     cf AS (SELECT w, CAST(SUM(tf) AS BIGINT) AS cf FROM tf GROUP BY w),
     cand AS (
       SELECT DISTINCT q.qid, t.doc_id FROM tf t JOIN qterms q USING (w)
@@ -5270,7 +5237,7 @@ def q95r_classifier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    words = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    words = F.filter(llmops.lower_words(), lambda x: x != "")
     wdf = docs.select("doc_id", words.alias("words")).filter(F.size("words") > 0)
     n_words = F.size("words").cast("long")
     total_len = F.aggregate(
@@ -5351,7 +5318,7 @@ def q95s_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "source",
-        F.size(F.filter(F.split(F.lower("text"), " "), lambda x: x != ""))
+        F.size(F.filter(llmops.lower_words(), lambda x: x != ""))
         .cast("long")
         .alias("n_tokens"),
         F.md5("text").alias("h"),
@@ -5435,7 +5402,7 @@ def q94h_filter_ablation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    words = F.filter(F.split(F.lower("text"), " "), lambda x: x != "")
+    words = F.filter(llmops.lower_words(), lambda x: x != "")
     wdf = docs.select("doc_id", words.alias("words")).filter(F.size("words") >= 3)
     n_words = F.size("words").cast("long")
     total_len = F.aggregate(
@@ -5545,36 +5512,9 @@ def q99e_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q97k_bm25_index_persist",
-    oracle="""
-    WITH qterms(qid, w) AS (
-      VALUES (1,'table'),(1,'scan'),(2,'join'),(2,'hash'),(3,'window'),(3,'agg')
-    ),
-    words AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents
-    ),
-    dl AS (SELECT doc_id, COUNT(*) AS dl FROM words GROUP BY doc_id),
-    stats AS (
-      SELECT COUNT(*) AS n_docs, SUM(dl) * 1.0 / COUNT(*) AS avgdl FROM dl
-    ),
-    tf AS (
-      SELECT doc_id, w, COUNT(*) AS tf
-      FROM words JOIN (SELECT DISTINCT w FROM qterms) USING (w)
-      GROUP BY doc_id, w
-    ),
-    df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-    scored AS (
-      SELECT q.qid, t.doc_id,
-             CAST(ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-                  * (t.tf * 2.2)
-                  / (t.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))
-               AS DECIMAL(18,10)) AS s
-      FROM tf t
-      JOIN qterms q USING (w)
-      JOIN df USING (w)
-      JOIN dl USING (doc_id)
-      CROSS JOIN stats
-    ),
-    agg AS (SELECT qid, doc_id, SUM(s) AS score FROM scored GROUP BY qid, doc_id),
+    oracle=_ORACLE_BM25_POSTINGS
+    + _ORACLE_BM25_SCORED
+    + """
     ranked AS (
       SELECT qid, doc_id, score,
              ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
@@ -7785,7 +7725,7 @@ def q95ac_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 127).alias("prompt_id"),
         (
             F.size(F.split(F.col("text"), " "))
-            + 2 * F.size(F.array_distinct(F.split(F.lower(F.col("text")), " ")))
+            + 2 * F.size(F.array_distinct(llmops.lower_words()))
         )
         .cast("long")
         .alias("score"),
@@ -11315,7 +11255,7 @@ def q98q_zipf_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
     words = docs.select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "source", F.explode(llmops.lower_words()).alias("w")
     )
     freq = words.groupBy("source", "w").agg(F.count("*").alias("f"))
     totals = freq.groupBy("source").agg(
@@ -12759,7 +12699,7 @@ def q98w_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents")
-    lower_words = F.split(F.lower(F.col("text")), " ")
+    lower_words = llmops.lower_words()
 
     def score(stops: tuple[str, ...]) -> F.Column:
         arr = F.array(*[F.lit(s) for s in stops])
@@ -12886,7 +12826,7 @@ def q98y_quality_gate_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tc = (
         docs.select(
-            "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t")
+            "doc_id", F.explode(llmops.lower_words()).alias("t")
         )
         .groupBy("doc_id", "t")
         .agg(F.count("*").alias("c"))
@@ -12951,41 +12891,14 @@ def q98y_quality_gate_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q97u_rrf_fusion",
-    oracle="""
-    WITH qterms(qid, w) AS (
-      VALUES (1,'table'),(1,'scan'),(2,'join'),(2,'hash'),(3,'window'),(3,'agg')
-    ),
-    words AS (
-      SELECT doc_id, unnest(string_split(lower(text), ' ')) AS w FROM documents
-    ),
-    dl AS (SELECT doc_id, COUNT(*) AS dl FROM words GROUP BY doc_id),
-    stats AS (
-      SELECT COUNT(*) AS n_docs, SUM(dl) * 1.0 / COUNT(*) AS avgdl FROM dl
-    ),
-    tf AS (
-      SELECT doc_id, w, COUNT(*) AS tf
-      FROM words JOIN (SELECT DISTINCT w FROM qterms) USING (w)
-      GROUP BY doc_id, w
-    ),
-    df AS (SELECT w, COUNT(*) AS df FROM tf GROUP BY w),
-    bm25s AS (
-      SELECT q.qid, t.doc_id,
-             CAST(ln((stats.n_docs - df.df + 0.5) / (df.df + 0.5) + 1.0)
-                  * (t.tf * 2.2)
-                  / (t.tf + 1.2 * (0.25 + 0.75 * dl.dl / stats.avgdl))
-               AS DECIMAL(18,10)) AS s
-      FROM tf t
-      JOIN qterms q USING (w)
-      JOIN df USING (w)
-      JOIN dl USING (doc_id)
-      CROSS JOIN stats
-    ),
-    bm25agg AS (SELECT qid, doc_id, SUM(s) AS score FROM bm25s GROUP BY qid, doc_id),
+    oracle=_ORACLE_BM25_POSTINGS
+    + _ORACLE_BM25_SCORED
+    + """
     lex AS (
       SELECT qid, doc_id, rnk FROM (
         SELECT qid, doc_id,
                ROW_NUMBER() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
-        FROM bm25agg
+        FROM agg
       ) WHERE rnk <= 20
     ),
     probes AS (SELECT vec_id + 1 AS qid, CAST(embedding AS DOUBLE[]) AS qv
@@ -13158,7 +13071,7 @@ def q98z_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tc = (
-        docs.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("t"))
+        docs.select("doc_id", F.explode(llmops.lower_words()).alias("t"))
         .groupBy("doc_id", "t")
         .agg(F.count("*").alias("c"))
     )
@@ -14563,7 +14476,7 @@ def q98af_watermark_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     perdoc = (
         docs.select(
             "source",
-            F.split(F.lower("text"), " ").alias("w"),
+            llmops.lower_words().alias("w"),
         )
         .where(F.size("w") >= 2)
         .select(
@@ -14606,17 +14519,67 @@ def q98af_watermark_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q94x_degree_assortativity",
-    oracle="""
-    WITH nn AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
+# The variable-fan-out link graph: doc -> (id*7 + k) mod N for
+# k = 1..(1 + id % 3). The Spark and DuckDB sides are independent
+# derivations of the same rule; every query on this graph starts from them.
+_ORACLE_LINK_GRAPH = """
+    WITH nodes AS (SELECT doc_id FROM documents),
+    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
     edges AS (
       SELECT doc_id AS src,
-             (doc_id * 7 + k.k) % nn.n AS dst
-      FROM documents, nn,
-           (SELECT unnest(range(1, 4)) AS k) k
-      WHERE k.k <= 1 + doc_id % 3
-    ),
+             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
+      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
+      WHERE t.k <= 1 + doc_id % 3
+    ),"""
+
+# ... plus its symmetrized, self-loop-free edge set und(u < v)
+_ORACLE_UNDIRECTED_GRAPH = _ORACLE_LINK_GRAPH + """
+    und AS (
+      SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
+      FROM edges WHERE src <> dst GROUP BY 1, 2
+    ),"""
+
+
+def _link_graph(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(docs, edges) of the variable-fan-out link graph: docs(doc_id) and
+    edges(src, dst). The modular edge rule needs the node count N, a
+    bounded driver scalar read by one count() job."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    n = docs.count()
+    edges = docs.select(
+        F.col("doc_id").alias("src"),
+        F.explode(
+            F.slice(
+                F.array(
+                    *[
+                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
+                        for k in (1, 2, 3)
+                    ]
+                ),
+                1,
+                (1 + F.col("doc_id") % 3).cast("int"),
+            )
+        ).alias("dst"),
+    )
+    return docs, edges
+
+
+def _undirected(edges: DataFrame) -> DataFrame:
+    """The symmetrized, self-loop-free edge set und(u < v) of ``edges``."""
+    return (
+        edges.filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("u"),
+            F.greatest("src", "dst").alias("v"),
+        )
+        .distinct()
+    )
+
+
+@query(
+    "q94x_degree_assortativity",
+    oracle=_ORACLE_LINK_GRAPH
+    + """
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
         SELECT src AS node FROM edges
@@ -14668,26 +14631,10 @@ def q94x_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: degrees are one map-side-combinable pass over 2|E| endpoint
     rows; the two degree join-backs key on node id (co-partitioned);
     the moment aggregate is map-side combinable. No driver-side state
-    beyond the bounded N scalar the q94e family already carries.
+    beyond _link_graph's N.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
+    _, edges = _link_graph(spark, sf_dir)
     deg = (
         edges.select(F.col("src").alias("node"))
         .unionAll(edges.select(F.col("dst").alias("node")))
@@ -14728,15 +14675,8 @@ def q94x_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q94y_hits",
-    oracle="""
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-    ),
+    oracle=_ORACLE_LINK_GRAPH
+    + """
     a1 AS (SELECT nd.doc_id AS node,
                   CAST(COALESCE(COUNT(e.src), 0) AS BIGINT) AS a
            FROM nodes nd LEFT JOIN edges e ON e.dst = nd.doc_id
@@ -14796,23 +14736,7 @@ def q94y_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     larger, so exactness is structural, not statistical).
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
+    docs, edges = _link_graph(spark, sf_dir)
     hubs = docs.select(F.col("doc_id").alias("node"), F.lit(1).cast("long").alias("h"))
     auth = None
     for _ in range(2):
@@ -14864,15 +14788,8 @@ def q94y_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q94z_link_prediction",
-    oracle="""
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-    ),
+    oracle=_ORACLE_LINK_GRAPH
+    + """
     cand AS (
       SELECT e1.src AS u, e2.src AS v, CAST(COUNT(*) AS BIGINT) AS cn
       FROM edges e1 JOIN edges e2
@@ -14922,23 +14839,7 @@ def q94z_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort. 100 TB shape: identical to the LSH-band candidate join.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
+    _, edges = _link_graph(spark, sf_dir)
     e1 = edges.select(F.col("src").alias("u"), "dst")
     e2 = edges.select(F.col("src").alias("v"), F.col("dst").alias("dst2"))
     cand = (
@@ -15512,7 +15413,7 @@ def q95at_rho_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = docs.select(
         "doc_id",
         "source",
-        F.explode(F.split(F.lower("text"), " ")).alias("w"),
+        F.explode(llmops.lower_words()).alias("w"),
     )
     fg = words.groupBy("w").agg(F.count("*").cast("long").alias("cg"))
     fi = (
@@ -15681,19 +15582,7 @@ def _kcore_oracle(k: int = 3, iters: int = 8) -> str:
     """Unrolled k-core peel (the q94e unrolled-CTE idiom): a0 = all
     nodes; a_{i+1} = nodes with >= k edges to a_i survivors on the
     symmetrized self-loop-free q94x link graph."""
-    head = """
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-    ),
-    und AS (
-      SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-      FROM edges WHERE src <> dst GROUP BY 1, 2
-    ),
+    head = _ORACLE_UNDIRECTED_GRAPH + """
     adj AS (
       SELECT u AS a, v AS b FROM und
       UNION ALL
@@ -15749,31 +15638,8 @@ def q94aa_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     peel; iterations are sequential by nature.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
+    docs, edges = _link_graph(spark, sf_dir)
+    und = _undirected(edges)
     adj = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         und.select(F.col("v").alias("a"), F.col("u").alias("b"))
     ).transform(ckpt)
@@ -15897,19 +15763,8 @@ def q98ah_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q94ac_modularity",
-    oracle="""
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-    ),
-    und AS (
-      SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-      FROM edges WHERE src <> dst GROUP BY 1, 2
-    ),
+    oracle=_ORACLE_UNDIRECTED_GRAPH
+    + """
     mtot AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM und),
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
@@ -15964,32 +15819,8 @@ def q94ac_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-sized crosses a second shuffle.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .transform(ckpt)
-    )
+    _, edges = _link_graph(spark, sf_dir)
+    und = _undirected(edges).transform(ckpt)
     mtot = und.agg(F.count("*").cast("long").alias("m"))
     deg = (
         und.select(F.col("u").alias("node"))
@@ -16036,19 +15867,8 @@ def q94ac_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q94ae_rich_club",
-    oracle="""
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-    ),
-    und AS (
-      SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-      FROM edges WHERE src <> dst GROUP BY 1, 2
-    ),
+    oracle=_ORACLE_UNDIRECTED_GRAPH
+    + """
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
         SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
@@ -16096,32 +15916,8 @@ def q94ae_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts end to end.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .transform(ckpt)
-    )
+    _, edges = _link_graph(spark, sf_dir)
+    und = _undirected(edges).transform(ckpt)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))
@@ -16205,7 +16001,7 @@ def q98ai_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     words = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "doc_id", F.explode(llmops.lower_words()).alias("w")
     )
     wc = words.groupBy("doc_id", "w").agg(
         F.count("*").cast("long").alias("c")
@@ -16423,7 +16219,7 @@ def q98ak_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     words = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "doc_id", F.explode(llmops.lower_words()).alias("w")
     )
     tf = words.groupBy("doc_id", "w").agg(
         F.count("*").cast("long").alias("tf")
@@ -16619,19 +16415,8 @@ def q99ah_aiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q94ak_clustering_coefficient",
-    oracle="""
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-    ),
-    und AS (
-      SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-      FROM edges WHERE src <> dst GROUP BY 1, 2
-    ),
+    oracle=_ORACLE_UNDIRECTED_GRAPH
+    + """
     adj AS (
       SELECT u AS a, v AS b FROM und
       UNION ALL
@@ -16691,32 +16476,8 @@ def q94ak_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     end.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-        .transform(ckpt)
-    )
+    _, edges = _link_graph(spark, sf_dir)
+    und = _undirected(edges).transform(ckpt)
     adj = und.select(F.col("u").alias("a"), F.col("v").alias("b")).unionAll(
         und.select(F.col("v").alias("a"), F.col("u").alias("b"))
     )
@@ -16850,7 +16611,7 @@ def q98am_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents")
         .filter(F.col("source").isin("src0", "src1"))
         .select(
-            "source", F.explode(F.split(F.lower("text"), " ")).alias("w")
+            "source", F.explode(llmops.lower_words()).alias("w")
         )
     )
     f = words.groupBy("w").agg(
@@ -17035,22 +16796,15 @@ def q52c_systematic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q94ao_reciprocity",
-    oracle="""
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT DISTINCT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-        AND doc_id <> (doc_id * 7 + t.k) % (SELECT n FROM cnt)
-    ),
+    oracle=_ORACLE_LINK_GRAPH
+    + """
+    arcs AS (SELECT DISTINCT src, dst FROM edges WHERE src <> dst),
     recip AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS m,
              CAST(SUM(CASE WHEN r.src IS NOT NULL THEN 1 ELSE 0 END)
                   AS BIGINT) AS mutual
-      FROM edges e
-      LEFT JOIN edges r ON r.src = e.dst AND r.dst = e.src
+      FROM arcs e
+      LEFT JOIN arcs r ON r.src = e.dst AND r.dst = e.src
     )
     SELECT m AS n_edges, mutual AS n_mutual,
            CAST(1000000 * mutual // m AS BIGINT) AS reciprocity_micro,
@@ -17076,25 +16830,9 @@ def q94ao_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, |E| rows once. Exact integers end to end.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
+    _, edges = _link_graph(spark, sf_dir)
     edges = (
-        docs.select(
-            F.col("doc_id").alias("src"),
-            F.explode(
-                F.slice(
-                    F.array(
-                        *[
-                            (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                            for k in (1, 2, 3)
-                        ]
-                    ),
-                    1,
-                    (1 + F.col("doc_id") % 3).cast("int"),
-                )
-            ).alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
+        edges.filter(F.col("src") != F.col("dst"))
         .distinct()
         .transform(ckpt)
     )
@@ -17128,15 +16866,8 @@ def q94ao_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q94ap_katz_centrality",
-    oracle="""
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-    ),
+    oracle=_ORACLE_LINK_GRAPH
+    + """
     x0 AS (SELECT doc_id AS node, CAST(1000000 AS BIGINT) AS x FROM nodes),
     x1 AS (SELECT nd.doc_id AS node,
                   1000000 + CAST(COALESCE(SUM(p.x), 0) AS BIGINT) // 4 AS x
@@ -17191,23 +16922,7 @@ def q94ap_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pregel shape), lineage cut per round.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
+    docs, edges = _link_graph(spark, sf_dir)
     x = docs.select(
         F.col("doc_id").alias("node"), F.lit(1000000).cast("long").alias("x")
     )
@@ -17478,19 +17193,8 @@ def q97ad_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q94aq_powerlaw_tail",
-    oracle="""
-    WITH nodes AS (SELECT doc_id FROM documents),
-    cnt AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM nodes),
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id * 7 + t.k) % (SELECT n FROM cnt) AS dst
-      FROM nodes CROSS JOIN (SELECT unnest([1, 2, 3]) AS k) t
-      WHERE t.k <= 1 + doc_id % 3
-    ),
-    und AS (
-      SELECT LEAST(src, dst) AS u, GREATEST(src, dst) AS v
-      FROM edges WHERE src <> dst GROUP BY 1, 2
-    ),
+    oracle=_ORACLE_UNDIRECTED_GRAPH
+    + """
     deg AS (
       SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
         SELECT u AS node FROM und UNION ALL SELECT v AS node FROM und
@@ -17549,31 +17253,8 @@ def q94aq_powerlaw_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the degree grid.
     """
     tune_for_oracle(spark)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    n = docs.count()  # bounded driver scalar: the modular edge rule needs N
-    edges = docs.select(
-        F.col("doc_id").alias("src"),
-        F.explode(
-            F.slice(
-                F.array(
-                    *[
-                        (F.col("doc_id") * 7 + F.lit(k)) % F.lit(n)
-                        for k in (1, 2, 3)
-                    ]
-                ),
-                1,
-                (1 + F.col("doc_id") % 3).cast("int"),
-            )
-        ).alias("dst"),
-    )
-    und = (
-        edges.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-        )
-        .distinct()
-    )
+    _, edges = _link_graph(spark, sf_dir)
+    und = _undirected(edges)
     deg = (
         und.select(F.col("u").alias("node"))
         .unionAll(und.select(F.col("v").alias("node")))

@@ -30,8 +30,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from better_cdc_spark.io import load_table
-from better_cdc_spark.llmops import array_literal
+from better_cdc_spark.llmops import array_literal, lower_words
 from better_cdc_spark.queries import query
+from better_cdc_spark.scratch import scratch_dir
 from better_cdc_spark.session import ckpt, tune_for_oracle
 
 
@@ -318,10 +319,9 @@ def q07_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     supp = load_table(spark, sf_dir, "supplier")
-    # per-invocation dir: a shared fixed path races overwrite-against-read
-    # when two harnesses run concurrently (same class of hazard the
-    # advisor flagged for the JSONL sink)
-    out = tempfile.mkdtemp(prefix="bcs_q07_orc_")
+    # per-process dir: a path shared across processes races
+    # overwrite-against-read when two harnesses run concurrently
+    out = scratch_dir("q07_orc")
     supp.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("s_nationkey").agg(
@@ -359,7 +359,7 @@ def q07b_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey", F.col("s_acctbal").cast("string").alias("s_acctbal")
     )
-    out = tempfile.mkdtemp(prefix="bcs_q07b_xml_")
+    out = scratch_dir("q07b_xml")
     supp.write.mode("overwrite").format("xml").option("rowTag", "supplier").save(out)
     back = spark.read.format("xml").option("rowTag", "supplier").load(out)
     return back.groupBy("s_nationkey").agg(
@@ -2893,13 +2893,12 @@ def q05d_jsonl_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale — a schema-inference pass over 100 TB of JSON is a full extra
     scan); decimal money survives because the check re-casts post-read.
     """
-    import tempfile
 
     tune_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
-    # per-invocation dir: concurrent harness runs (check at one sf while
+    # per-process dir: concurrent harness runs (check at one sf while
     # bench runs another) must not race overwrite-against-read
-    out = tempfile.mkdtemp(prefix="bcs_q05d_jsonl_")
+    out = scratch_dir("q05d_jsonl")
     orders.write.mode("overwrite").json(out)
     back = spark.read.schema(orders.schema).json(out)
     return back.groupBy("o_orderstatus").agg(
@@ -8346,9 +8345,11 @@ def q44i_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "q47f_markov_stationary",
-    oracle="""
+# The event-transition chain: per-user lead() pairs counted per
+# (src, dst), states indexed 0..k-1 in name order, and the row-stochastic
+# micro-unit matrix flattened as probs_f(f = i*k + j, p = 10^6*c // row
+# total); the oracle also collects it in f order as mat(m).
+_ORACLE_TRANSITIONS = """
     WITH pairs AS (
       SELECT event_type,
              lead(event_type) OVER (PARTITION BY user_id
@@ -8373,7 +8374,48 @@ def q44i_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), mat AS (
       SELECT array_agg(COALESCE(pf.p, 0)::BIGINT ORDER BY grid.f) AS m
       FROM grid LEFT JOIN probs_f pf ON pf.f = grid.f
-    ), folded AS (
+    ),"""
+
+
+def _transition_chain(ev: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(types, kk, probs_f) of the event-transition chain over ``ev``:
+    types(t, idx), kk(k) and probs_f(f, p) as in _ORACLE_TRANSITIONS."""
+    w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
+    pairs = ev.select(
+        "event_type", F.lead("event_type").over(w_user).alias("nxt")
+    ).filter(F.col("nxt").isNotNull())
+    cnt = pairs.groupBy(
+        F.col("event_type").alias("src"), F.col("nxt").alias("dst")
+    ).agg(F.count("*").cast("long").alias("c"))
+    types = (
+        ev.select(F.col("event_type").alias("t"))
+        .distinct()
+        .select(
+            "t", (F.row_number().over(W.orderBy("t")) - 1).cast("long").alias("idx")
+        )
+    )
+    kk = types.agg(F.count("*").cast("long").alias("k"))
+    rt = cnt.groupBy("src").agg(F.sum("c").cast("long").alias("tot"))
+    si = types.select(F.col("t").alias("src"), F.col("idx").alias("i"))
+    di = types.select(F.col("t").alias("dst"), F.col("idx").alias("j"))
+    probs_f = (
+        cnt.join(F.broadcast(si), "src")
+        .join(F.broadcast(di), "dst")
+        .join(F.broadcast(rt), "src")
+        .join(F.broadcast(kk))
+        .select(
+            (F.col("i") * F.col("k") + F.col("j")).alias("f"),
+            F.expr("1000000 * c div tot").alias("p"),
+        )
+    )
+    return types, kk, probs_f
+
+
+@query(
+    "q47f_markov_stationary",
+    oracle=_ORACLE_TRANSITIONS
+    + """
+    folded AS (
       SELECT kk.k,
              list_reduce(
                list_concat(
@@ -8425,34 +8467,7 @@ def q47f_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
-    w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        "event_type", F.lead("event_type").over(w_user).alias("nxt")
-    ).filter(F.col("nxt").isNotNull())
-    cnt = pairs.groupBy(
-        F.col("event_type").alias("src"), F.col("nxt").alias("dst")
-    ).agg(F.count("*").cast("long").alias("c"))
-    types = (
-        ev.select(F.col("event_type").alias("t"))
-        .distinct()
-        .select(
-            "t", (F.row_number().over(W.orderBy("t")) - 1).cast("long").alias("idx")
-        )
-    )
-    kk = types.agg(F.count("*").cast("long").alias("k"))
-    rt = cnt.groupBy("src").agg(F.sum("c").cast("long").alias("tot"))
-    si = types.select(F.col("t").alias("src"), F.col("idx").alias("i"))
-    di = types.select(F.col("t").alias("dst"), F.col("idx").alias("j"))
-    probs_f = (
-        cnt.join(F.broadcast(si), "src")
-        .join(F.broadcast(di), "dst")
-        .join(F.broadcast(rt), "src")
-        .join(F.broadcast(kk))
-        .select(
-            (F.col("i") * F.col("k") + F.col("j")).alias("f"),
-            F.expr("1000000 * c div tot").alias("p"),
-        )
-    )
+    types, kk, probs_f = _transition_chain(ev)
     mat = probs_f.join(F.broadcast(kk)).agg(
         F.map_from_entries(F.collect_list(F.struct("f", "p"))).alias("mp"),
         F.max("k").alias("k"),
@@ -8507,32 +8522,9 @@ def q47f_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q47i_absorbing_hit_probability",
-    oracle="""
-    WITH pairs AS (
-      SELECT event_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS nxt
-      FROM events
-    ), cnt AS (
-      SELECT event_type AS src, nxt AS dst, CAST(COUNT(*) AS BIGINT) AS c
-      FROM pairs WHERE nxt IS NOT NULL GROUP BY 1, 2
-    ), types AS (
-      SELECT t, CAST(ROW_NUMBER() OVER (ORDER BY t) - 1 AS BIGINT) AS idx
-      FROM (SELECT DISTINCT event_type AS t FROM events)
-    ), kk AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM types),
-    rt AS (SELECT src, CAST(SUM(c) AS BIGINT) AS tot FROM cnt GROUP BY src),
-    probs_f AS (
-      SELECT si.idx * kk.k + di.idx AS f, 1000000 * c // rt.tot AS p
-      FROM cnt
-      JOIN types si ON si.t = cnt.src
-      JOIN types di ON di.t = cnt.dst
-      JOIN rt ON rt.src = cnt.src, kk
-    ), grid AS (
-      SELECT unnest(range((SELECT k * k FROM kk))) AS f
-    ), mat AS (
-      SELECT array_agg(COALESCE(pf.p, 0)::BIGINT ORDER BY grid.f) AS m
-      FROM grid LEFT JOIN probs_f pf ON pf.f = grid.f
-    ), tg AS (SELECT idx AS g FROM types WHERE t = 'purchase'),
+    oracle=_ORACLE_TRANSITIONS
+    + """
+    tg AS (SELECT idx AS g FROM types WHERE t = 'purchase'),
     folded AS (
       SELECT kk.k,
              list_reduce(
@@ -8582,35 +8574,8 @@ def q47i_absorbing_hit_probability(spark: SparkSession, sf_dir: str) -> DataFram
     """
     tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
-    w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        "event_type", F.lead("event_type").over(w_user).alias("nxt")
-    ).filter(F.col("nxt").isNotNull())
-    cnt = pairs.groupBy(
-        F.col("event_type").alias("src"), F.col("nxt").alias("dst")
-    ).agg(F.count("*").cast("long").alias("c"))
-    types = (
-        ev.select(F.col("event_type").alias("t"))
-        .distinct()
-        .select(
-            "t", (F.row_number().over(W.orderBy("t")) - 1).cast("long").alias("idx")
-        )
-    )
-    kk = types.agg(F.count("*").cast("long").alias("k"))
+    types, kk, probs_f = _transition_chain(ev)
     tg = types.filter(F.col("t") == "purchase").select(F.col("idx").alias("g"))
-    rt = cnt.groupBy("src").agg(F.sum("c").cast("long").alias("tot"))
-    si = types.select(F.col("t").alias("src"), F.col("idx").alias("i"))
-    di = types.select(F.col("t").alias("dst"), F.col("idx").alias("j"))
-    probs_f = (
-        cnt.join(F.broadcast(si), "src")
-        .join(F.broadcast(di), "dst")
-        .join(F.broadcast(rt), "src")
-        .join(F.broadcast(kk))
-        .select(
-            (F.col("i") * F.col("k") + F.col("j")).alias("f"),
-            F.expr("1000000 * c div tot").alias("p"),
-        )
-    )
     mat = (
         probs_f.join(F.broadcast(kk))
         .join(F.broadcast(tg))
@@ -8671,32 +8636,9 @@ def q47i_absorbing_hit_probability(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "q47j_removal_effect_attribution",
-    oracle="""
-    WITH pairs AS (
-      SELECT event_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS nxt
-      FROM events
-    ), cnt AS (
-      SELECT event_type AS src, nxt AS dst, CAST(COUNT(*) AS BIGINT) AS c
-      FROM pairs WHERE nxt IS NOT NULL GROUP BY 1, 2
-    ), types AS (
-      SELECT t, CAST(ROW_NUMBER() OVER (ORDER BY t) - 1 AS BIGINT) AS idx
-      FROM (SELECT DISTINCT event_type AS t FROM events)
-    ), kk AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM types),
-    rt AS (SELECT src, CAST(SUM(c) AS BIGINT) AS tot FROM cnt GROUP BY src),
-    probs_f AS (
-      SELECT si.idx * kk.k + di.idx AS f, 1000000 * c // rt.tot AS p
-      FROM cnt
-      JOIN types si ON si.t = cnt.src
-      JOIN types di ON di.t = cnt.dst
-      JOIN rt ON rt.src = cnt.src, kk
-    ), grid AS (
-      SELECT unnest(range((SELECT k * k FROM kk))) AS f
-    ), mat AS (
-      SELECT array_agg(COALESCE(pf.p, 0)::BIGINT ORDER BY grid.f) AS m
-      FROM grid LEFT JOIN probs_f pf ON pf.f = grid.f
-    ), tg AS (SELECT idx AS g FROM types WHERE t = 'purchase'),
+    oracle=_ORACLE_TRANSITIONS
+    + """
+    tg AS (SELECT idx AS g FROM types WHERE t = 'purchase'),
     firstev AS (
       SELECT event_type AS t, CAST(COUNT(*) AS BIGINT) AS c
       FROM (SELECT user_id, event_type,
@@ -8781,34 +8723,8 @@ def q47j_removal_effect_attribution(spark: SparkSession, sf_dir: str) -> DataFra
     tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
     w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        "event_type", F.lead("event_type").over(w_user).alias("nxt")
-    ).filter(F.col("nxt").isNotNull())
-    cnt = pairs.groupBy(
-        F.col("event_type").alias("src"), F.col("nxt").alias("dst")
-    ).agg(F.count("*").cast("long").alias("c"))
-    types = (
-        ev.select(F.col("event_type").alias("t"))
-        .distinct()
-        .select(
-            "t", (F.row_number().over(W.orderBy("t")) - 1).cast("long").alias("idx")
-        )
-    )
-    kk = types.agg(F.count("*").cast("long").alias("k"))
+    types, kk, probs_f = _transition_chain(ev)
     tg = types.filter(F.col("t") == "purchase").select(F.col("idx").alias("g"))
-    rt = cnt.groupBy("src").agg(F.sum("c").cast("long").alias("tot"))
-    si = types.select(F.col("t").alias("src"), F.col("idx").alias("i"))
-    di = types.select(F.col("t").alias("dst"), F.col("idx").alias("j"))
-    probs_f = (
-        cnt.join(F.broadcast(si), "src")
-        .join(F.broadcast(di), "dst")
-        .join(F.broadcast(rt), "src")
-        .join(F.broadcast(kk))
-        .select(
-            (F.col("i") * F.col("k") + F.col("j")).alias("f"),
-            F.expr("1000000 * c div tot").alias("p"),
-        )
-    )
     firstev = (
         ev.select(
             "event_type", F.row_number().over(w_user).alias("rn")
@@ -12027,7 +11943,7 @@ def q98ag_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     words = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("w")
+        "doc_id", F.explode(lower_words()).alias("w")
     )
     wc = words.groupBy("doc_id", "w").agg(
         F.count("*").cast("long").alias("c")
@@ -14548,32 +14464,9 @@ def _slem_duck_step() -> str:
 
 @query(
     "q47r_markov_slem",
-    oracle=f"""
-    WITH pairs AS (
-      SELECT event_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS nxt
-      FROM events
-    ), cnt AS (
-      SELECT event_type AS src, nxt AS dst, CAST(COUNT(*) AS BIGINT) AS c
-      FROM pairs WHERE nxt IS NOT NULL GROUP BY 1, 2
-    ), types AS (
-      SELECT t, CAST(ROW_NUMBER() OVER (ORDER BY t) - 1 AS BIGINT) AS idx
-      FROM (SELECT DISTINCT event_type AS t FROM events)
-    ), kk AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM types),
-    rt AS (SELECT src, CAST(SUM(c) AS BIGINT) AS tot FROM cnt GROUP BY src),
-    probs_f AS (
-      SELECT si.idx * kk.k + di.idx AS f, 1000000 * c // rt.tot AS p
-      FROM cnt
-      JOIN types si ON si.t = cnt.src
-      JOIN types di ON di.t = cnt.dst
-      JOIN rt ON rt.src = cnt.src, kk
-    ), grid AS (
-      SELECT unnest(range((SELECT k * k FROM kk))) AS f
-    ), mat AS (
-      SELECT array_agg(COALESCE(pf.p, 0)::BIGINT ORDER BY grid.f) AS m
-      FROM grid LEFT JOIN probs_f pf ON pf.f = grid.f
-    ), statf AS (
+    oracle=_ORACLE_TRANSITIONS
+    + f"""
+    statf AS (
       SELECT list_reduce(
                list_concat(
                  [list_transform(range(kk.k), x -> 1000000 // kk.k)],
@@ -14634,35 +14527,7 @@ def q47r_markov_slem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
-    w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        "event_type", F.lead("event_type").over(w_user).alias("nxt")
-    ).filter(F.col("nxt").isNotNull())
-    cnt = pairs.groupBy(
-        F.col("event_type").alias("src"), F.col("nxt").alias("dst")
-    ).agg(F.count("*").cast("long").alias("c"))
-    types = (
-        ev.select(F.col("event_type").alias("t"))
-        .distinct()
-        .select(
-            "t",
-            (F.row_number().over(W.orderBy("t")) - 1).cast("long").alias("idx"),
-        )
-    )
-    kk = types.agg(F.count("*").cast("long").alias("k"))
-    rt = cnt.groupBy("src").agg(F.sum("c").cast("long").alias("tot"))
-    si = types.select(F.col("t").alias("src"), F.col("idx").alias("i"))
-    di = types.select(F.col("t").alias("dst"), F.col("idx").alias("j"))
-    probs_f = (
-        cnt.join(F.broadcast(si), "src")
-        .join(F.broadcast(di), "dst")
-        .join(F.broadcast(rt), "src")
-        .join(F.broadcast(kk))
-        .select(
-            (F.col("i") * F.col("k") + F.col("j")).alias("f"),
-            F.expr("1000000 * c div tot").alias("p"),
-        )
-    )
+    _, kk, probs_f = _transition_chain(ev)
     mat = probs_f.join(F.broadcast(kk)).agg(
         F.map_from_entries(F.collect_list(F.struct("f", "p"))).alias("mp"),
         F.max("k").alias("k"),
@@ -14989,32 +14854,9 @@ def q44l_burstiness_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q47s_absorbing_expected_steps",
-    oracle="""
-    WITH pairs AS (
-      SELECT event_type,
-             lead(event_type) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id) AS nxt
-      FROM events
-    ), cnt AS (
-      SELECT event_type AS src, nxt AS dst, CAST(COUNT(*) AS BIGINT) AS c
-      FROM pairs WHERE nxt IS NOT NULL GROUP BY 1, 2
-    ), types AS (
-      SELECT t, CAST(ROW_NUMBER() OVER (ORDER BY t) - 1 AS BIGINT) AS idx
-      FROM (SELECT DISTINCT event_type AS t FROM events)
-    ), kk AS (SELECT CAST(COUNT(*) AS BIGINT) AS k FROM types),
-    rt AS (SELECT src, CAST(SUM(c) AS BIGINT) AS tot FROM cnt GROUP BY src),
-    probs_f AS (
-      SELECT si.idx * kk.k + di.idx AS f, 1000000 * c // rt.tot AS p
-      FROM cnt
-      JOIN types si ON si.t = cnt.src
-      JOIN types di ON di.t = cnt.dst
-      JOIN rt ON rt.src = cnt.src, kk
-    ), grid AS (
-      SELECT unnest(range((SELECT k * k FROM kk))) AS f
-    ), mat AS (
-      SELECT array_agg(COALESCE(pf.p, 0)::BIGINT ORDER BY grid.f) AS m
-      FROM grid LEFT JOIN probs_f pf ON pf.f = grid.f
-    ), tg AS (SELECT idx AS g FROM types WHERE t = 'purchase'),
+    oracle=_ORACLE_TRANSITIONS
+    + """
+    tg AS (SELECT idx AS g FROM types WHERE t = 'purchase'),
     folded AS (
       SELECT kk.k,
              list_reduce(
@@ -15075,36 +14917,8 @@ def q47s_absorbing_expected_steps(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
-    w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        "event_type", F.lead("event_type").over(w_user).alias("nxt")
-    ).filter(F.col("nxt").isNotNull())
-    cnt = pairs.groupBy(
-        F.col("event_type").alias("src"), F.col("nxt").alias("dst")
-    ).agg(F.count("*").cast("long").alias("c"))
-    types = (
-        ev.select(F.col("event_type").alias("t"))
-        .distinct()
-        .select(
-            "t",
-            (F.row_number().over(W.orderBy("t")) - 1).cast("long").alias("idx"),
-        )
-    )
-    kk = types.agg(F.count("*").cast("long").alias("k"))
+    types, kk, probs_f = _transition_chain(ev)
     tg = types.filter(F.col("t") == "purchase").select(F.col("idx").alias("g"))
-    rt = cnt.groupBy("src").agg(F.sum("c").cast("long").alias("tot"))
-    si = types.select(F.col("t").alias("src"), F.col("idx").alias("i"))
-    di = types.select(F.col("t").alias("dst"), F.col("idx").alias("j"))
-    probs_f = (
-        cnt.join(F.broadcast(si), "src")
-        .join(F.broadcast(di), "dst")
-        .join(F.broadcast(rt), "src")
-        .join(F.broadcast(kk))
-        .select(
-            (F.col("i") * F.col("k") + F.col("j")).alias("f"),
-            F.expr("1000000 * c div tot").alias("p"),
-        )
-    )
     mat = (
         probs_f.join(F.broadcast(kk))
         .join(F.broadcast(tg))

@@ -13,8 +13,6 @@ timing is not SQL-expressible, the final state here is.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -24,6 +22,7 @@ from better_cdc_spark.queries import query
 from better_cdc_spark.queries import relational
 from better_cdc_spark.queries.llm import _EXACT_JACCARD_ORACLE, _append_index_rows
 from better_cdc_spark.queries.relational import _d, dec
+from better_cdc_spark.scratch import scratch_dir
 from better_cdc_spark.session import ckpt, tune_for_oracle
 from better_cdc_spark.streaming.core import events_stream, run_to_memory
 from better_cdc_spark.streaming.stateful import stateful_user_agg
@@ -228,7 +227,7 @@ def _run_stateful_agg(spark: SparkSession, sf_dir: str, engine: str) -> DataFram
     out = stateful_user_agg(
         events_stream(spark, sf_dir, max_files_per_trigger=1), engine=engine
     )
-    out_dir = tempfile.mkdtemp(prefix="bcs_q85_")
+    out_dir = scratch_dir("q85_sink")
 
     def write_batch(df: DataFrame, _epoch: int) -> None:
         df.write.mode("append").parquet(out_dir)
@@ -236,7 +235,7 @@ def _run_stateful_agg(spark: SparkSession, sf_dir: str, engine: str) -> DataFram
     q = (
         out.writeStream.outputMode("update")
         .foreachBatch(write_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_q85_"))
+        .option("checkpointLocation", scratch_dir("q85_ck"))
         .start()
     )
     try:
@@ -326,8 +325,7 @@ def q87_foreachbatch_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFr
     bucket and prune the dedup read to the batch's own buckets.
     """
     tune_for_oracle(spark)
-    out_dir = tempfile.mkdtemp(prefix="bcs_q87_sink_")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = scratch_dir("q87_sink")
 
     def idempotent_write(batch_df: DataFrame, _epoch: int) -> None:
         spark_ = batch_df.sparkSession
@@ -342,7 +340,7 @@ def q87_foreachbatch_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFr
         q = (
             events_stream(spark, sf_dir)
             .writeStream.foreachBatch(idempotent_write)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_q87_"))
+            .option("checkpointLocation", scratch_dir("q87_ck"))
             .start()
         )
         try:
@@ -383,8 +381,7 @@ def q87b_windowed_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     tune_for_oracle(spark)
     window_s = 86400.0
-    out_dir = tempfile.mkdtemp(prefix="bcs_q87b_sink_")
-    shutil.rmtree(out_dir, ignore_errors=True)
+    out_dir = scratch_dir("q87b_sink")
 
     def windowed_idempotent_write(batch_df: DataFrame, _epoch: int) -> None:
         spark_ = batch_df.sparkSession
@@ -416,7 +413,7 @@ def q87b_windowed_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame
         q = (
             events_stream(spark, sf_dir, max_files_per_trigger=1)
             .writeStream.foreachBatch(windowed_idempotent_write)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_q87b_"))
+            .option("checkpointLocation", scratch_dir("q87b_ck"))
             .start()
         )
         try:
@@ -507,10 +504,8 @@ def q89_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean and DLQ at different offsets.
     """
     tune_for_oracle(spark)
-    clean_dir = tempfile.mkdtemp(prefix="bcs_q89_clean_")
-    dlq_dir = tempfile.mkdtemp(prefix="bcs_q89_dlq_")
-    shutil.rmtree(clean_dir, ignore_errors=True)
-    shutil.rmtree(dlq_dir, ignore_errors=True)
+    clean_dir = scratch_dir("q89_clean")
+    dlq_dir = scratch_dir("q89_dlq")
 
     def fan_out(batch_df: DataFrame, _epoch: int) -> None:
         batch_df.persist()
@@ -527,7 +522,7 @@ def q89_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         events_stream(spark, sf_dir)
         .writeStream.foreachBatch(fan_out)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_q89_"))
+        .option("checkpointLocation", scratch_dir("q89_ck"))
         .start()
     )
     try:
@@ -569,8 +564,7 @@ def q81b_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch batch aggregate, which is exactly what the oracle checks.
     """
     tune_for_oracle(spark)
-    log_dir = tempfile.mkdtemp(prefix="bcs_q81b_log_")
-    shutil.rmtree(log_dir, ignore_errors=True)
+    log_dir = scratch_dir("q81b_log")
 
     agg = (
         events_stream(spark, sf_dir)
@@ -588,7 +582,7 @@ def q81b_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = (
         agg.writeStream.outputMode("update")
         .foreachBatch(append_emissions)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_q81b_"))
+        .option("checkpointLocation", scratch_dir("q81b_ck"))
         .start()
     )
     try:
@@ -721,20 +715,16 @@ def q86b_stream_static_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the re-read must live inside the batch function.
     """
     tune_for_oracle(spark)
-    import shutil as _sh
-    import tempfile as _tf
 
     from better_cdc_spark.io import load_table
 
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.col("value").cast("decimal(18,2)").alias("v")
     )
-    src = _tf.mkdtemp(prefix="bcs_q86b_src_")
-    _sh.rmtree(src, ignore_errors=True)
-    dim_dir = _tf.mkdtemp(prefix="bcs_q86b_dim_")
-    out_dir = _tf.mkdtemp(prefix="bcs_q86b_out_")
-    _sh.rmtree(out_dir, ignore_errors=True)
-    ck = _tf.mkdtemp(prefix="bcs_ck_q86b_")
+    src = scratch_dir("q86b_src")
+    dim_dir = scratch_dir("q86b_dim")
+    out_dir = scratch_dir("q86b_out")
+    ck = scratch_dir("q86b_ck")
 
     users = events.select("user_id").distinct()
 
@@ -926,7 +916,6 @@ def q04c_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch answer.
     """
     tune_for_oracle(spark)
-    import tempfile as _tf
 
     agg = (
         events_stream(spark, sf_dir, max_files_per_trigger=1)
@@ -939,7 +928,7 @@ def q04c_available_now_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
         .format("memory")
         .queryName(name)
         .trigger(availableNow=True)
-        .option("checkpointLocation", _tf.mkdtemp(prefix="bcs_ck_q04c_"))
+        .option("checkpointLocation", scratch_dir("q04c_ck"))
         .start()
     )
     q.awaitTermination()  # AvailableNow terminates by itself — no stop()
@@ -1103,7 +1092,6 @@ def qm04_txlog_streaming_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly Spark's replayable-source contract; a source that can't
     promise it needs the content-keyed anti-join (q87b) instead.
     """
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -1120,7 +1108,7 @@ def qm04_txlog_streaming_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         q = (
             events_stream(spark, sf_dir, max_files_per_trigger=1)
             .writeStream.foreachBatch(commit_epoch)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm04_"))
+            .option("checkpointLocation", scratch_dir("qm04_ck"))
             .start()
         )
         try:
@@ -1176,7 +1164,6 @@ def qm05_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from better_cdc_spark import llmops
     from better_cdc_spark.queries.llm import JACCARD_THRESHOLD
-    from better_cdc_spark.scratch import scratch_dir
 
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -1237,7 +1224,7 @@ def qm05_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(arrivals)
             .writeStream.foreachBatch(lsh_step)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm05_"))
+            .option("checkpointLocation", scratch_dir("qm05_ck"))
             .start()
         )
         try:
@@ -1327,7 +1314,6 @@ def qm06_streaming_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from better_cdc_spark.queries.llm import _ahash_band_hashes
-    from better_cdc_spark.scratch import scratch_dir
 
     tune_for_oracle(spark)
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
@@ -1407,7 +1393,7 @@ def qm06_streaming_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1)
             .parquet(arrivals)
             .writeStream.foreachBatch(ahash_step)
-            .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm06_"))
+            .option("checkpointLocation", scratch_dir("qm06_ck"))
             .start()
         )
         try:
@@ -1472,8 +1458,6 @@ def qm08_streaming_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (re-append the OR-merge, drop old partials) keeps that factor O(1)
     — same shape as q87b's commit-bucket sink maintenance.
     """
-    from better_cdc_spark.scratch import scratch_dir
-
     tune_for_oracle(spark)
     events = load_table(spark, sf_dir, "events").select("event_type", "user_id")
 
@@ -1505,7 +1489,7 @@ def qm08_streaming_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(bitmap_step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm08_"))
+        .option("checkpointLocation", scratch_dir("qm08_ck"))
         .start()
     )
     try:
@@ -1596,8 +1580,6 @@ def qm07_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     max needs a per-group rescan) — that variant needs the qc20-style
     chunk recompute instead, deliberately out of scope here.
     """
-    from better_cdc_spark.scratch import scratch_dir
-
     tune_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
@@ -1675,7 +1657,7 @@ def qm07_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(ivm_step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm07_"))
+        .option("checkpointLocation", scratch_dir("qm07_ck"))
         .start()
     )
     try:
@@ -1822,8 +1804,6 @@ def qm13_streaming_crdt_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials; read-side merge is partials x epochs with the usual
     compaction story.
     """
-    from better_cdc_spark.scratch import scratch_dir
-
     tune_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     w = (
@@ -1868,7 +1848,7 @@ def qm13_streaming_crdt_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(merge_step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm13_"))
+        .option("checkpointLocation", scratch_dir("qm13_ck"))
         .start()
     )
     try:
@@ -1948,8 +1928,6 @@ def qm14_delta_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     story as qm07/qm08. MIN/MAX-style aggregates on top of V need the
     qm15 multiset-state treatment, not aggregate-only state.
     """
-    from better_cdc_spark.scratch import scratch_dir
-
     tune_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -2058,7 +2036,7 @@ def qm14_delta_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(delta_join_step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm14_"))
+        .option("checkpointLocation", scratch_dir("qm14_ck"))
         .start()
     )
     try:
@@ -2129,8 +2107,6 @@ def qm15_minmax_ivm_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
     6 UPDATE price +250 (retract old value, assert new); keys ending
     in 9 DELETE — so retractions hit group maxima and minima for real.
     """
-    from better_cdc_spark.scratch import scratch_dir
-
     tune_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
@@ -2176,7 +2152,7 @@ def qm15_minmax_ivm_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(minmax_step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm15_"))
+        .option("checkpointLocation", scratch_dir("qm15_ck"))
         .start()
     )
     try:
@@ -2244,8 +2220,6 @@ def qm16_ivm_avg_var_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the oracle's. Deltas commute ⇒ full value-hash oracle
     from the final state, any micro-batch split.
     """
-    from better_cdc_spark.scratch import scratch_dir
-
     tune_for_oracle(spark)
     orders = load_table(spark, sf_dir, "orders")
     dollars = F.round(F.col("o_totalprice"), 0).cast("long")
@@ -2297,7 +2271,7 @@ def qm16_ivm_avg_var_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(moment_step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm16_"))
+        .option("checkpointLocation", scratch_dir("qm16_ck"))
         .start()
     )
     try:
@@ -2370,8 +2344,6 @@ def qm17_streaming_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sample never re-reads the corpus, and the same partials give
     per-window samples for free by bucketing epochs.
     """
-    from better_cdc_spark.scratch import scratch_dir
-
     K = 100
     tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events").select(
@@ -2406,7 +2378,7 @@ def qm17_streaming_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(sample_step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm17_"))
+        .option("checkpointLocation", scratch_dir("qm17_ck"))
         .start()
     )
     try:
@@ -2485,7 +2457,6 @@ def qm18_streaming_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataF
     medians) are the production percentile path (q36m documents the
     exact-refinement alternative for batch).
     """
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -2519,7 +2490,7 @@ def qm18_streaming_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataF
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm18_"))
+        .option("checkpointLocation", scratch_dir("qm18_ck"))
         .start()
     )
     try:
@@ -2627,7 +2598,6 @@ def qm19_streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     retained. Reference pattern: internal/engine stateful op (R5) +
     the commit-boundary idempotent sink (R10-R12).
     """
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -2744,7 +2714,7 @@ def qm19_streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm19_"))
+        .option("checkpointLocation", scratch_dir("qm19_ck"))
         .start()
     )
     try:
@@ -2840,8 +2810,6 @@ def qm20_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(epochs x 128), and the registers double as per-window sketches by
     bucketing epochs — cardinality-over-time for free.
     """
-    from better_cdc_spark.scratch import scratch_dir
-
     tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
 
@@ -2880,7 +2848,7 @@ def qm20_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(sketch_step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm20_"))
+        .option("checkpointLocation", scratch_dir("qm20_ck"))
         .start()
     )
     try:
@@ -2959,7 +2927,6 @@ def qm21_streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries never disturb seasonal alignment.
     """
     from better_cdc_spark.operators import hw_additive_step
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -3072,7 +3039,7 @@ def qm21_streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm21_"))
+        .option("checkpointLocation", scratch_dir("qm21_ck"))
         .start()
     )
     try:
@@ -3148,7 +3115,6 @@ def qm22_streaming_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
     one O(1) txlog append; no raw history retained.
     """
     from better_cdc_spark.operators import kalman_cv_step
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -3244,7 +3210,7 @@ def qm22_streaming_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm22_"))
+        .option("checkpointLocation", scratch_dir("qm22_ck"))
         .start()
     )
     try:
@@ -3319,7 +3285,6 @@ def qm23_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     one O(1) txlog append; no raw history retained.
     """
     from better_cdc_spark.operators import page_hinkley_step
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -3407,7 +3372,7 @@ def qm23_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm23_"))
+        .option("checkpointLocation", scratch_dir("qm23_ck"))
         .start()
     )
     try:
@@ -3474,7 +3439,6 @@ def qm24_streaming_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
     one O(1) txlog append; no raw history retained.
     """
     from better_cdc_spark.operators import croston_step
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -3561,7 +3525,7 @@ def qm24_streaming_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm24_"))
+        .option("checkpointLocation", scratch_dir("qm24_ck"))
         .start()
     )
     try:
@@ -3673,7 +3637,6 @@ def qm25_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     KS evaluation runs over the bucket-bounded merged frame. The
     histogram IS the state — no raw value retained.
     """
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -3707,7 +3670,7 @@ def qm25_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm25_"))
+        .option("checkpointLocation", scratch_dir("qm25_ck"))
         .start()
     )
     try:
@@ -3795,7 +3758,6 @@ def qm26_streaming_confusion_monitor(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: per epoch one map-side 4-cell fold appended O(1); the
     readout is a scalar frame. The cells ARE the state.
     """
-    from better_cdc_spark.scratch import scratch_dir
     from better_cdc_spark.txlog import TxLogTable
 
     tune_for_oracle(spark)
@@ -3832,7 +3794,7 @@ def qm26_streaming_confusion_monitor(spark: SparkSession, sf_dir: str) -> DataFr
         .option("maxFilesPerTrigger", 1)
         .parquet(arrivals)
         .writeStream.foreachBatch(step)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_qm26_"))
+        .option("checkpointLocation", scratch_dir("qm26_ck"))
         .start()
     )
     try:

@@ -1,11 +1,13 @@
 """Per-process scratch directories for queries that persist-and-reread.
 
-Several registry queries materialize an index/sink to local disk and read
-it back cold (q97f IVF, q97k BM25, streaming sinks). `tempfile.mkdtemp`
-per invocation leaks a directory on every bench/check sweep; this helper
-gives each logical name ONE deterministic per-process path that is wiped
-on reuse and removed at interpreter exit, so repeated sweeps are
-steady-state on disk.
+Registry queries materialize indexes, sinks, staged sources and streaming
+checkpoints to local disk and read them back cold (q97f IVF, q97k BM25,
+the streaming sinks, `streaming.core.run_to_memory`/`run_to_parquet`).
+`scratch_dir` is the one mechanism they use for a per-run directory:
+`tempfile.mkdtemp` per invocation leaked a directory on every bench/check
+sweep, while this helper gives each logical name ONE deterministic
+per-process path that is wiped on reuse and removed at interpreter exit,
+so repeated sweeps are steady-state on disk.
 
 At 100 TB these paths are object-store URIs managed by the table format /
 catalog, not local temp dirs — this module is test-scale plumbing only.

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from better_cdc_spark.io import NANOS_AS_LONG, read_parquet
+from better_cdc_spark.scratch import scratch_dir
 from better_cdc_spark.session import ckpt
 
 def _events_raw_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
@@ -126,7 +127,7 @@ def run_to_memory(
         sdf.writeStream.outputMode(mode)
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix=f"bcs_ck_{name}_"))
+        .option("checkpointLocation", scratch_dir("run_to_memory_ck"))
         .start()
     )
     try:
@@ -157,7 +158,7 @@ def run_to_parquet(sdf: DataFrame, out_dir: str, *, mode: str = "append") -> Non
     q = (
         sdf.writeStream.outputMode(mode)
         .foreachBatch(write_batch)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_pq_"))
+        .option("checkpointLocation", scratch_dir("run_to_parquet_ck"))
         .start()
     )
     try:

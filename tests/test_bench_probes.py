@@ -16,6 +16,7 @@ from pathlib import Path
 import pytest
 
 import bench
+from tools.plan_capture import normalize
 
 SF_DIR = "/root/testdata/sf0.001"
 ROOT = Path(bench.__file__).resolve().parent
@@ -80,6 +81,40 @@ def test_sf1_scaling_fabricates_and_measures(spark):
         assert name in bench.HEADLINE, f"{name} probed but not a headline query"
     for name in bench.SF1_EXTRA_PROBES:
         assert name not in bench.HEADLINE  # probe-only, not a headline entry
+
+
+# one captured execution, as tools/plan_capture.py writes it; the fields
+# are the ids that differ between two runs of the same code
+_CAPTURE = """== execution 0 ==
+AdaptiveSparkPlan isFinalPlan=true
++- == Final Plan ==
+   *(3) BroadcastHashJoin [src#{a}L], [node#{b}L], Inner, BuildRight, false
+   :- *(3) Project [src#{a}L, filter(w#{c}, lambdafunction(NOT (lambda x_{k}#{d} = ), lambda x_{k}#{d}, false)) AS w#{e}]
+   :  +- FileScan parquet [src#{a}L,w#{c}] Location: InMemoryFileIndex [file:{root}/documents.parquet]
+   +- BroadcastExchange HashedRelationBroadcastMode(List(input[0, bigint, false]),false), [plan_id={p}]
+      +- Subquery subquery#{f}, [id=#{g}]
+      +- Execute InsertIntoHadoopFsRelationCommand file:{root}/hist, false, Parquet, [path={root}/hist], Overwrite
+== execution 1 ==
+WriteToDataSourceV2 MicroBatchWrite[epoch: 0, writer: org.apache.spark.sql.execution.streaming.sources.MemoryStreamingWrite@{h}]
++- StateStoreSave [event_type#{a}], state info [ checkpoint = <unknown>, runId = {u}, opId = 0, ver = 0, numPartitions = 8]
+   +- Scan ExistingRDD [event_id#{b}L], SQLExecutionRDD[{r}] at start at {site}, `mem_{m}`
+"""
+
+
+def test_plan_capture_normalizer_strips_run_ids_only():
+    one = _CAPTURE.format(
+        a=1, b=2, c=3, d=4, e=5, f=6, g=7, k=1, p=8, root="/tmp/a", h="58e1e18c",
+        u="65659300-68cb-489c-bb03-aba52d232024", r=2206, m="1b929987",
+        site="NativeMethodAccessorImpl.java:0",
+    )
+    two = _CAPTURE.format(
+        a=91, b=92, c=93, d=94, e=95, f=96, g=97, k=2, p=98, root="/tmp/bcs_b/x",
+        h="10bb2ac4", u="be033a08-ca39-41fe-a1b5-0ec599ce79af", r=2197, m="f1fb4c27",
+        site="<unknown>:0",
+    )
+    assert one != two and normalize(one) == normalize(two)
+    smj = one.replace("BroadcastHashJoin", "SortMergeJoin")
+    assert normalize(smj) != normalize(one)
 
 
 def test_compact_line_fits_driver_tail_window():

@@ -750,3 +750,20 @@ def test_replay_of_commit_epoch_reuses_prior_pending_snapshot(spark, tmp_path):
         _batch_df(spark, [_marker(5, "0/F1", "C", 701, TS)]), epoch_id=2
     )
     assert [e for e, _ in pipe._pending_epoch_dirs()] == [1, 2]
+
+
+def test_qc14_keeps_its_dirs_under_the_scratch_root(spark):
+    """qc14 stages waves, history and a checkpoint on disk; all of it must
+    live under the per-process scratch root, so repeated sweeps leave no
+    directory behind in the system temp dir."""
+    import tempfile
+
+    from better_cdc_spark.queries import load_all
+    from tests.conftest import SF_SMOKE
+
+    def bcs_entries() -> set[str]:
+        return {e for e in os.listdir(tempfile.gettempdir()) if e.startswith("bcs_")}
+
+    before = bcs_entries()
+    assert load_all()["qc14_streaming_scd2"].fn(spark, SF_SMOKE).count() > 0
+    assert bcs_entries() - before - {f"bcs_scratch_{os.getpid()}"} == set()
