@@ -8722,9 +8722,9 @@ def q47j_removal_effect_attribution(spark: SparkSession, sf_dir: str) -> DataFra
     """
     tune_for_oracle(spark)
     ev = load_table(spark, sf_dir, "events")
-    w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
     types, kk, probs_f = _transition_chain(ev)
     tg = types.filter(F.col("t") == "purchase").select(F.col("idx").alias("g"))
+    w_user = W.partitionBy("user_id").orderBy("ts", "event_id")
     firstev = (
         ev.select(
             "event_type", F.row_number().over(w_user).alias("rn")
