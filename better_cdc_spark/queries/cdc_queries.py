@@ -783,7 +783,11 @@ def qc14_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one DETERMINISTICALLY-NAMED file per commit wave: appended writes
     # carry random uuid part names, which name-ordered mtime stamping
     # would scramble ~50% of runs (waves must admit in commit order)
-    from better_cdc_spark.streaming.core import stage_numbered_file, stamp_ordered_mtimes
+    from better_cdc_spark.streaming.core import (
+        drain_files,
+        stage_numbered_file,
+        stamp_ordered_mtimes,
+    )
 
     for wave in (1, 2):
         stage_numbered_file(changes.filter(F.col("commit_seq") == wave), src, wave)
@@ -807,19 +811,7 @@ def qc14_streaming_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).transform(ckpt)
         new_hist.write.mode("overwrite").parquet(hist_dir)
 
-    q = (
-        spark.readStream.schema(changes.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qc14_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain_files(spark, changes.schema, src, step, scratch_dir("qc14_ck"))
 
     return spark.read.schema(out_schema).parquet(hist_dir)
 

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from better_cdc_spark import llmops
 from better_cdc_spark.io import load_table
 from better_cdc_spark.queries import query
-from better_cdc_spark.session import ckpt, tune_cpu_bound, tune_for_oracle
+from better_cdc_spark.session import ckpt, conf_override, tune_cpu_bound, tune_for_oracle
 
 #: target rows per parquet file for incremental-index appends — at the
 #: index row width here (~40 B) this is a few tens of MB per file, the
@@ -6793,10 +6793,7 @@ def q95aa_incremental_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame
     # tiny index partition file its own split (128 near-empty tasks per
     # probe). At corpus scale partition files are real and the default
     # is right — save/restore around the incremental run.
-    _open_cost_key = "spark.sql.files.openCostInBytes"
-    _prev_open_cost = spark.conf.get(_open_cost_key, None)
-    spark.conf.set(_open_cost_key, str(64 * 1024))
-    try:
+    with conf_override(spark, "spark.sql.files.openCostInBytes", str(64 * 1024)):
         for b in range(n_batches):
             batch_docs = docs.filter(F.col("doc_id") % n_batches == b)
             rows = llmops.lsh_band_rows(batch_docs).transform(ckpt)
@@ -6839,13 +6836,6 @@ def q95aa_incremental_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame
             )
             discovered.append(cands)
             _append_index_rows(rows, index_dir, rows.count())
-    finally:
-        # restore even on failure — leaking the 64 KiB override would skew
-        # every later query's split planning in the shared session
-        if _prev_open_cost is None:
-            spark.conf.unset(_open_cost_key)
-        else:
-            spark.conf.set(_open_cost_key, _prev_open_cost)
     # cross-step discovery events are disjoint by construction (each
     # unordered pair is found exactly once) — plain union, no re-dedup
     all_cands = discovered[0]
@@ -9359,10 +9349,8 @@ def q99u_incremental_ahash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         for k in range(4)
     )
     discovered = []
-    _open_cost_key = "spark.sql.files.openCostInBytes"
-    _prev_open_cost = spark.conf.get(_open_cost_key, None)
-    spark.conf.set(_open_cost_key, str(64 * 1024))  # tiny-file test-scale guard
-    try:
+    # tiny-file test-scale guard
+    with conf_override(spark, "spark.sql.files.openCostInBytes", str(64 * 1024)):
         for b in range(n_batches):
             batch = docs.filter(F.col("doc_id") % n_batches == b)
             rows = (
@@ -9417,11 +9405,6 @@ def q99u_incremental_ahash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             discovered.append(cands)
             _append_index_rows(rows, index_dir, rows.count())
-    finally:
-        if _prev_open_cost is None:
-            spark.conf.unset(_open_cost_key)
-        else:
-            spark.conf.set(_open_cost_key, _prev_open_cost)
     # each unordered pair has exactly one discovery event (later batch
     # probes an index already holding the earlier doc) — plain union
     out = discovered[0]
@@ -9876,10 +9859,7 @@ def q95ai_index_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 7 == 3) & (F.col("doc_id") % 3 < 2)
     ).transform(ckpt)
     discovered = []
-    _open_cost_key = "spark.sql.files.openCostInBytes"
-    _prev = spark.conf.get(_open_cost_key, None)
-    spark.conf.set(_open_cost_key, str(64 * 1024))
-    try:
+    with conf_override(spark, "spark.sql.files.openCostInBytes", str(64 * 1024)):
         for b in range(n_batches):
             batch = docs.filter(F.col("doc_id") % n_batches == b)
             rows = (
@@ -9934,11 +9914,6 @@ def q95ai_index_with_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .transform(ckpt)
             )
             _append_index_rows(rows, index_dir, rows.count())
-    finally:
-        if _prev is None:
-            spark.conf.unset(_open_cost_key)
-        else:
-            spark.conf.set(_open_cost_key, _prev)
     out = discovered[0]
     for c in discovered[1:]:
         out = out.unionByName(c)
@@ -10148,10 +10123,7 @@ def qc23_cdc_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     discovered = []
-    _open_cost_key = "spark.sql.files.openCostInBytes"
-    _prev = spark.conf.get(_open_cost_key, None)
-    spark.conf.set(_open_cost_key, str(64 * 1024))
-    try:
+    with conf_override(spark, "spark.sql.files.openCostInBytes", str(64 * 1024)):
         for b in range(3):
             inserts = docs.filter(F.col("doc_id") % 3 == b).select(
                 "doc_id",
@@ -10199,11 +10171,6 @@ def qc23_cdc_index_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .transform(ckpt)
             )
             _append_index_rows(rows, index_dir, rows.count())
-    finally:
-        if _prev is None:
-            spark.conf.unset(_open_cost_key)
-        else:
-            spark.conf.set(_open_cost_key, _prev)
     out = discovered[0]
     for c in discovered[1:]:
         out = out.unionByName(c)

@@ -1,9 +1,14 @@
 """Streaming operator surface (SURVEY.md §2.2 Q04, Q06, Q80–Q87).
 
-Each query drives a real Structured Streaming query on the finite events
-file source synchronously (processAllAvailable), so the result is
-deterministic and oracle-checkable: complete/update-mode results over a
-finite stream equal the batch aggregation DuckDB computes.
+Each query drives a real Structured Streaming query on a finite file
+source synchronously, so the result is deterministic and oracle-checkable:
+complete/update-mode results over a finite stream equal the batch
+aggregation DuckDB computes. The one drive path is streaming.core's
+harness: ``run_to_memory``/``run_to_parquet`` for sink-shaped queries,
+``drain`` for a hand-built writer, and ``stage_waves`` + ``drain_files``
+for the foreachBatch queries that stream their own arrival files (with
+``replay_first`` for the checkpoint-recovery replay of epoch 0). q04c is
+the exception: AvailableNow terminates on its own.
 
 Watermark append-mode emission timing (windows held until the watermark
 passes) is covered by unit tests in tests/test_streaming.py — emission
@@ -23,8 +28,15 @@ from better_cdc_spark.queries import relational
 from better_cdc_spark.queries.llm import _EXACT_JACCARD_ORACLE, _append_index_rows
 from better_cdc_spark.queries.relational import _d, dec
 from better_cdc_spark.scratch import scratch_dir
-from better_cdc_spark.session import ckpt, tune_for_oracle
-from better_cdc_spark.streaming.core import events_stream, run_to_memory
+from better_cdc_spark.session import ckpt, conf_override, tune_for_oracle
+from better_cdc_spark.streaming.core import (
+    drain,
+    drain_files,
+    events_stream,
+    run_to_memory,
+    run_to_parquet,
+    stage_waves,
+)
 from better_cdc_spark.streaming.stateful import stateful_user_agg
 
 
@@ -228,21 +240,7 @@ def _run_stateful_agg(spark: SparkSession, sf_dir: str, engine: str) -> DataFram
         events_stream(spark, sf_dir, max_files_per_trigger=1), engine=engine
     )
     out_dir = scratch_dir("q85_sink")
-
-    def write_batch(df: DataFrame, _epoch: int) -> None:
-        df.write.mode("append").parquet(out_dir)
-
-    q = (
-        out.writeStream.outputMode("update")
-        .foreachBatch(write_batch)
-        .option("checkpointLocation", scratch_dir("q85_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    run_to_parquet(out, out_dir, mode="update")
 
     # Keep the final state per key (events file may span several batches).
     res = spark.read.parquet(out_dir)
@@ -337,17 +335,12 @@ def q87_foreachbatch_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFr
         fresh.write.mode("append").parquet(out_dir)
 
     for _attempt in range(2):  # second run = full replay (kill/restart case)
-        q = (
+        drain(
             events_stream(spark, sf_dir)
             .writeStream.foreachBatch(idempotent_write)
             .option("checkpointLocation", scratch_dir("q87_ck"))
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
 
     sunk = spark.read.parquet(out_dir)
     return sunk.groupBy("event_type").agg(F.count("*").alias("n"))
@@ -410,20 +403,69 @@ def q87b_windowed_idempotent_sink(spark: SparkSession, sf_dir: str) -> DataFrame
         fresh.write.mode("append").partitionBy("commit_bucket").parquet(out_dir)
 
     for _attempt in range(2):  # second run = full replay (kill/restart case)
-        q = (
+        drain(
             events_stream(spark, sf_dir, max_files_per_trigger=1)
             .writeStream.foreachBatch(windowed_idempotent_write)
             .option("checkpointLocation", scratch_dir("q87b_ck"))
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
 
     sunk = spark.read.parquet(out_dir)
     return sunk.groupBy("event_type").agg(F.count("*").alias("n"))
+
+
+# Signups matched to the same user's purchases within the following
+# hour, the q88 family's join. ``wm`` is the global watermark the finite
+# stream ends at (the min over both inputs of max event time, minus the
+# 2 h delay): Spark emits a null-matched row only once it passes that
+# row's join bound.
+_ORACLE_SIGNUP_PURCHASE = """
+    WITH s AS (SELECT user_id, event_id AS signup_id, ts AS s_ts
+               FROM events WHERE event_type = 'signup'),
+    p AS (SELECT user_id, event_id AS purchase_id, ts AS p_ts
+          FROM events WHERE event_type = 'purchase'),
+    wm AS (SELECT LEAST((SELECT MAX(ts) FROM events WHERE event_type = 'signup'),
+                        (SELECT MAX(ts) FROM events WHERE event_type = 'purchase'))
+                  - INTERVAL 2 HOUR AS w),
+    matched AS (
+      SELECT s.user_id, s.signup_id, p.purchase_id
+      FROM s JOIN p ON s.user_id = p.user_id
+       AND p.p_ts >= s.s_ts AND p.p_ts <= s.s_ts + INTERVAL 1 HOUR
+    ),"""
+
+
+def _signup_purchase(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The watermarked signup stream (s_user, signup_id, s_ts) joined
+    ``how`` to the purchase stream (p_user, purchase_id, p_ts): same user,
+    purchase within the hour after the signup (_ORACLE_SIGNUP_PURCHASE's
+    ``matched``)."""
+    signups = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "signup")
+        .select(
+            F.col("user_id").alias("s_user"),
+            F.col("event_id").alias("signup_id"),
+            F.col("ts").alias("s_ts"),
+        )
+        .withWatermark("s_ts", "2 hours")
+    )
+    purchases = (
+        events_stream(spark, sf_dir)
+        .filter(F.col("event_type") == "purchase")
+        .select(
+            F.col("user_id").alias("p_user"),
+            F.col("event_id").alias("purchase_id"),
+            F.col("ts").alias("p_ts"),
+        )
+        .withWatermark("p_ts", "2 hours")
+    )
+    return signups.join(
+        purchases,
+        (F.col("s_user") == F.col("p_user"))
+        & (F.col("p_ts") >= F.col("s_ts"))
+        & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 HOUR")),
+        how,
+    )
 
 
 @query(
@@ -450,32 +492,7 @@ def q88_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equals the batch self-join the oracle runs.
     """
     tune_for_oracle(spark)
-    ev = events_stream(spark, sf_dir)
-    signups = (
-        ev.filter(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("s_user"),
-            F.col("event_id").alias("signup_id"),
-            F.col("ts").alias("s_ts"),
-        )
-        .withWatermark("s_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("s_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("s_ts"))
-        & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 HOUR")),
-    ).select(
+    joined = _signup_purchase(spark, sf_dir, "inner").select(
         F.col("s_user").alias("user_id"),
         "signup_id",
         "purchase_id",
@@ -519,17 +536,12 @@ def q89_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             batch_df.unpersist()
 
-    q = (
+    drain(
         events_stream(spark, sf_dir)
         .writeStream.foreachBatch(fan_out)
         .option("checkpointLocation", scratch_dir("q89_ck"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
 
     clean_n = spark.read.parquet(clean_dir).agg(
         F.lit("clean").alias("sink"), F.count("*").alias("n")
@@ -579,17 +591,12 @@ def q81b_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             log_dir
         )
 
-    q = (
+    drain(
         agg.writeStream.outputMode("update")
         .foreachBatch(append_emissions)
         .option("checkpointLocation", scratch_dir("q81b_ck"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
 
     log = spark.read.parquet(log_dir)
     w = W.partitionBy("window_start").orderBy(F.col("epoch").desc())
@@ -602,30 +609,16 @@ def q81b_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q88b_stream_stream_left_join",
-    oracle="""
-    WITH s AS (SELECT user_id, event_id AS signup_id, ts AS s_ts
-               FROM events WHERE event_type = 'signup'),
-    p AS (SELECT user_id, event_id AS purchase_id, ts AS p_ts
-          FROM events WHERE event_type = 'purchase'),
-    matched AS (
-      SELECT s.user_id, s.signup_id, p.purchase_id
-      FROM s JOIN p ON s.user_id = p.user_id
-       AND p.p_ts >= s.s_ts AND p.p_ts <= s.s_ts + INTERVAL 1 HOUR
-    ),
+    oracle=_ORACLE_SIGNUP_PURCHASE
+    + """
     unmatched AS (
       SELECT s.user_id, s.signup_id, CAST(NULL AS BIGINT) AS purchase_id
-      FROM s
+      FROM s, wm
       WHERE NOT EXISTS (
         SELECT 1 FROM p WHERE p.user_id = s.user_id
           AND p.p_ts >= s.s_ts AND p.p_ts <= s.s_ts + INTERVAL 1 HOUR
       )
-      -- Spark emits a null-matched left row only once the GLOBAL
-      -- watermark (min over both inputs of max event time, minus the 2h
-      -- delay) passes the s_ts + 1h join bound:
-      AND s.s_ts + INTERVAL 1 HOUR <
-          LEAST((SELECT MAX(ts) FROM events WHERE event_type = 'signup'),
-                (SELECT MAX(ts) FROM events WHERE event_type = 'purchase'))
-          - INTERVAL 2 HOUR
+      AND s.s_ts + INTERVAL 1 HOUR < wm.w
     )
     SELECT * FROM matched UNION ALL SELECT * FROM unmatched
     """,
@@ -643,33 +636,7 @@ def q88b_stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     matched pairs.
     """
     tune_for_oracle(spark)
-    signups = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("s_user"),
-            F.col("event_id").alias("signup_id"),
-            F.col("ts").alias("s_ts"),
-        )
-        .withWatermark("s_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("s_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("s_ts"))
-        & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    ).select(
+    joined = _signup_purchase(spark, sf_dir, "left_outer").select(
         F.col("s_user").alias("user_id"),
         "signup_id",
         "purchase_id",
@@ -749,27 +716,12 @@ def q86b_stream_static_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             out_dir
         )
 
-    def run_once() -> None:
-        q = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .writeStream.foreachBatch(step)
-            .option("checkpointLocation", ck)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-
     stage_wave(0)
     write_dim(1)
-    run_once()
+    drain_files(spark, events.schema, src, step, ck)
     stage_wave(1)
     write_dim(2)
-    run_once()
+    drain_files(spark, events.schema, src, step, ck)  # resumes from ck
 
     joined = spark.read.parquet(out_dir)
     return joined.groupBy("tier").agg(
@@ -779,19 +731,8 @@ def q86b_stream_static_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q88d_stream_stream_full_join",
-    oracle="""
-    WITH s AS (SELECT user_id, event_id AS signup_id, ts AS s_ts
-               FROM events WHERE event_type = 'signup'),
-    p AS (SELECT user_id, event_id AS purchase_id, ts AS p_ts
-          FROM events WHERE event_type = 'purchase'),
-    wm AS (SELECT LEAST((SELECT MAX(ts) FROM events WHERE event_type = 'signup'),
-                        (SELECT MAX(ts) FROM events WHERE event_type = 'purchase'))
-                  - INTERVAL 2 HOUR AS w),
-    matched AS (
-      SELECT s.user_id, s.signup_id, p.purchase_id
-      FROM s JOIN p ON s.user_id = p.user_id
-       AND p.p_ts >= s.s_ts AND p.p_ts <= s.s_ts + INTERVAL 1 HOUR
-    ),
+    oracle=_ORACLE_SIGNUP_PURCHASE
+    + """
     unmatched_s AS (
       SELECT s.user_id, s.signup_id, CAST(NULL AS BIGINT) AS purchase_id
       FROM s, wm
@@ -831,33 +772,7 @@ def q88d_stream_stream_full_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra null emissions.
     """
     tune_for_oracle(spark)
-    signups = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("s_user"),
-            F.col("event_id").alias("signup_id"),
-            F.col("ts").alias("s_ts"),
-        )
-        .withWatermark("s_ts", "2 hours")
-    )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("s_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("s_ts"))
-        & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 HOUR")),
-        "full_outer",
-    ).select(
+    joined = _signup_purchase(spark, sf_dir, "full_outer").select(
         F.coalesce(F.col("s_user"), F.col("p_user")).alias("user_id"),
         "signup_id",
         "purchase_id",
@@ -988,32 +903,9 @@ def q88c_stream_stream_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     same evictable state; the oracle is the batch EXISTS.
     """
     tune_for_oracle(spark)
-    signups = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("s_user"),
-            F.col("event_id").alias("signup_id"),
-            F.col("ts").alias("s_ts"),
-        )
-        .withWatermark("s_ts", "2 hours")
+    joined = _signup_purchase(spark, sf_dir, "left_semi").select(
+        F.col("s_user").alias("user_id"), "signup_id", "s_ts"
     )
-    purchases = (
-        events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", "2 hours")
-    )
-    joined = signups.join(
-        purchases,
-        (F.col("s_user") == F.col("p_user"))
-        & (F.col("p_ts") >= F.col("s_ts"))
-        & (F.col("p_ts") <= F.col("s_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_semi",
-    ).select(F.col("s_user").alias("user_id"), "signup_id", "s_ts")
     return run_to_memory(joined, mode="append")
 
 
@@ -1105,17 +997,12 @@ def qm04_txlog_streaming_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     for _attempt in range(2):  # second run = full replay (kill/restart case)
-        q = (
+        drain(
             events_stream(spark, sf_dir, max_files_per_trigger=1)
             .writeStream.foreachBatch(commit_epoch)
             .option("checkpointLocation", scratch_dir("qm04_ck"))
             .start()
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
 
     # Token dedup across a FRESH-checkpoint replay presumes the file
     # source batches files into identical epochs both runs. That holds
@@ -1169,16 +1056,11 @@ def qm05_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     arrivals = scratch_dir("qm05_arrivals")
-    for b in range(3):  # three arrival files = three micro-batches
-        docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    # three arrival files = three micro-batches
+    stage_waves((docs.filter(F.col("doc_id") % 3 == b) for b in range(3)), arrivals)
 
     index_dir = scratch_dir("qm05_band_index")
     cand_dir = scratch_dir("qm05_candidates")
-    _open_cost_key = "spark.sql.files.openCostInBytes"
-    _prev = spark.conf.get(_open_cost_key, None)
-    spark.conf.set(_open_cost_key, str(64 * 1024))
     import os
 
     def lsh_step(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1218,27 +1100,8 @@ def qm05_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _append_index_rows(rows, index_dir, rows.count())
 
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(arrivals)
-            .writeStream.foreachBatch(lsh_step)
-            .option("checkpointLocation", scratch_dir("qm05_ck"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-    finally:
-        # restore even on failure — leaking the 64 KiB override would
-        # skew every later query's split planning in the shared session
-        if _prev is None:
-            spark.conf.unset(_open_cost_key)
-        else:
-            spark.conf.set(_open_cost_key, _prev)
+    with conf_override(spark, "spark.sql.files.openCostInBytes", str(64 * 1024)):
+        drain_files(spark, docs.schema, arrivals, lsh_step, scratch_dir("qm05_ck"))
 
     streamed = spark.read.parquet(cand_dir).transform(ckpt)
     # the theorem, asserted: streamed discovery == one-shot candidates
@@ -1319,10 +1182,8 @@ def qm06_streaming_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
 
     arrivals = scratch_dir("qm06_arrivals")
-    for b in range(3):  # three arrival files = three micro-batches
-        docs.filter(F.col("doc_id") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    # three arrival files = three micro-batches
+    stage_waves((docs.filter(F.col("doc_id") % 3 == b) for b in range(3)), arrivals)
 
     index_dir = scratch_dir("qm06_band_index")
     cand_dir = scratch_dir("qm06_candidates")
@@ -1331,9 +1192,6 @@ def qm06_streaming_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.bit_count(F.col(f"a.b{k}").bitwiseXOR(F.col(f"b.b{k}")))
         for k in range(4)
     )
-    _open_cost_key = "spark.sql.files.openCostInBytes"
-    _prev = spark.conf.get(_open_cost_key, None)
-    spark.conf.set(_open_cost_key, str(64 * 1024))
 
     def ahash_step(batch_df: DataFrame, epoch_id: int) -> None:
         rows = (
@@ -1387,25 +1245,8 @@ def qm06_streaming_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _append_index_rows(rows, index_dir, rows.count())
 
-    try:
-        q = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(arrivals)
-            .writeStream.foreachBatch(ahash_step)
-            .option("checkpointLocation", scratch_dir("qm06_ck"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-    finally:
-        if _prev is None:
-            spark.conf.unset(_open_cost_key)
-        else:
-            spark.conf.set(_open_cost_key, _prev)
+    with conf_override(spark, "spark.sql.files.openCostInBytes", str(64 * 1024)):
+        drain_files(spark, docs.schema, arrivals, ahash_step, scratch_dir("qm06_ck"))
 
     return spark.read.parquet(cand_dir)
 
@@ -1462,10 +1303,8 @@ def qm08_streaming_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").select("event_type", "user_id")
 
     arrivals = scratch_dir("qm08_arrivals")
-    for b in range(3):  # three arrival files = three micro-batches
-        events.filter(F.col("user_id") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    # three arrival files = three micro-batches
+    stage_waves((events.filter(F.col("user_id") % 3 == b) for b in range(3)), arrivals)
 
     index_dir = scratch_dir("qm08_words")
 
@@ -1484,19 +1323,7 @@ def qm08_streaming_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(index_dir)
         )
 
-    q = (
-        spark.readStream.schema(events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(bitmap_step)
-        .option("checkpointLocation", scratch_dir("qm08_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain_files(spark, events.schema, arrivals, bitmap_step, scratch_dir("qm08_ck"))
 
     bm = (
         spark.read.parquet(index_dir)
@@ -1625,10 +1452,8 @@ def qm07_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog = inserts.unionByName(upd_price).unionByName(upd_group).unionByName(deletes)
 
     arrivals = scratch_dir("qm07_changelog")
-    for b in range(3):  # three arrival files = three micro-batches
-        changelog.filter(F.col("okey") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    # three arrival files = three micro-batches
+    stage_waves((changelog.filter(F.col("okey") % 3 == b) for b in range(3)), arrivals)
 
     partials = scratch_dir("qm07_partials")
 
@@ -1652,19 +1477,7 @@ def qm07_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(partials)
         )
 
-    q = (
-        spark.readStream.schema(changelog.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(ivm_step)
-        .option("checkpointLocation", scratch_dir("qm07_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain_files(spark, changelog.schema, arrivals, ivm_step, scratch_dir("qm07_ck"))
 
     return (
         spark.read.parquet(partials)
@@ -1824,13 +1637,8 @@ def qm13_streaming_crdt_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrivals = scratch_dir("qm13_states")
     # three arrival files: states scrambled across batches by a hash,
     # plus every 4th state RE-DELIVERED in the final batch
-    for b in range(2):
-        contrib.filter((F.col("seq") * 7919) % 2 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
-    contrib.filter(F.col("seq") % 4 == 0).coalesce(1).write.mode("append").parquet(
-        arrivals
-    )
+    scrambled = [contrib.filter((F.col("seq") * 7919) % 2 == b) for b in range(2)]
+    stage_waves(scrambled + [contrib.filter(F.col("seq") % 4 == 0)], arrivals)
 
     partials = scratch_dir("qm13_partials")
 
@@ -1843,19 +1651,7 @@ def qm13_streaming_crdt_counters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(partials)
         )
 
-    q = (
-        spark.readStream.schema(contrib.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(merge_step)
-        .option("checkpointLocation", scratch_dir("qm13_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain_files(spark, contrib.schema, arrivals, merge_step, scratch_dir("qm13_ck"))
 
     merged = (
         spark.read.parquet(partials)
@@ -1967,21 +1763,13 @@ def qm14_delta_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     arrivals = scratch_dir("qm14_changelog")
     mix = F.coalesce(F.col("okey") * 13, F.col("custkey") * 31)
-    for b in range(3):
-        changelog.filter(F.pmod(mix, F.lit(3)) == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    stage_waves(
+        (changelog.filter(F.pmod(mix, F.lit(3)) == b) for b in range(3)), arrivals
+    )
 
     a_dir = scratch_dir("qm14_state_a")
     b_dir = scratch_dir("qm14_state_b")
     v_dir = scratch_dir("qm14_view_log")
-
-    # Test-scale guard (the q95aa move): tiny per-kb partition files
-    # would each get their own split under the default 4 MiB open cost;
-    # at real scale buckets are real files and the default is right.
-    _open_cost_key = "spark.sql.files.openCostInBytes"
-    _prev_open_cost = spark.conf.get(_open_cost_key, None)
-    spark.conf.set(_open_cost_key, str(64 * 1024))
 
     # State dirs are PARTITIONED BY kb = hash(join key) mod NB — the
     # q95aa band-index discipline applied to join state: each batch
@@ -2031,23 +1819,13 @@ def qm14_delta_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         da.write.partitionBy("kb").mode("append").parquet(a_dir)
         db.write.partitionBy("kb").mode("append").parquet(b_dir)
 
-    q = (
-        spark.readStream.schema(changelog.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(delta_join_step)
-        .option("checkpointLocation", scratch_dir("qm14_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-        if _prev_open_cost is None:
-            spark.conf.unset(_open_cost_key)
-        else:
-            spark.conf.set(_open_cost_key, _prev_open_cost)
+    # Test-scale guard (the q95aa move): tiny per-kb partition files
+    # would each get their own split under the default 4 MiB open cost;
+    # at real scale buckets are real files and the default is right.
+    with conf_override(spark, "spark.sql.files.openCostInBytes", str(64 * 1024)):
+        drain_files(
+            spark, changelog.schema, arrivals, delta_join_step, scratch_dir("qm14_ck")
+        )
 
     live = (
         spark.read.parquet(v_dir)
@@ -2131,10 +1909,7 @@ def qm15_minmax_ivm_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog = ins.unionByName(upd_out).unionByName(upd_in).unionByName(dele)
 
     arrivals = scratch_dir("qm15_changelog")
-    for b in range(3):
-        changelog.filter(F.col("okey") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    stage_waves((changelog.filter(F.col("okey") % 3 == b) for b in range(3)), arrivals)
 
     multiset = scratch_dir("qm15_multiset")
 
@@ -2147,19 +1922,7 @@ def qm15_minmax_ivm_multiset(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(multiset)
         )
 
-    q = (
-        spark.readStream.schema(changelog.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(minmax_step)
-        .option("checkpointLocation", scratch_dir("qm15_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain_files(spark, changelog.schema, arrivals, minmax_step, scratch_dir("qm15_ck"))
 
     live = (
         spark.read.parquet(multiset)
@@ -2246,10 +2009,7 @@ def qm16_ivm_avg_var_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     changelog = ins.unionByName(upd_out).unionByName(upd_in).unionByName(dele)
 
     arrivals = scratch_dir("qm16_changelog")
-    for b in range(3):
-        changelog.filter(F.col("okey") % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    stage_waves((changelog.filter(F.col("okey") % 3 == b) for b in range(3)), arrivals)
 
     moments = scratch_dir("qm16_moments")
 
@@ -2266,19 +2026,7 @@ def qm16_ivm_avg_var_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(moments)
         )
 
-    q = (
-        spark.readStream.schema(changelog.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(moment_step)
-        .option("checkpointLocation", scratch_dir("qm16_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain_files(spark, changelog.schema, arrivals, moment_step, scratch_dir("qm16_ck"))
 
     m = (
         spark.read.parquet(moments)
@@ -2355,13 +2103,8 @@ def qm17_streaming_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three arrival files: events scrambled across batches by a hash
     # (NOT by rank), plus every 9th event RE-DELIVERED in the final
     # batch — at-least-once made concrete; idempotence must absorb it
-    for b in range(2):
-        ev.filter((F.col("event_id") * 7919) % 2 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
-    ev.filter(F.col("event_id") % 9 == 0).coalesce(1).write.mode("append").parquet(
-        arrivals
-    )
+    scrambled = [ev.filter((F.col("event_id") * 7919) % 2 == b) for b in range(2)]
+    stage_waves(scrambled + [ev.filter(F.col("event_id") % 9 == 0)], arrivals)
 
     partials = scratch_dir("qm17_partials")
 
@@ -2373,19 +2116,7 @@ def qm17_streaming_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(partials)
         )
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(sample_step)
-        .option("checkpointLocation", scratch_dir("qm17_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain_files(spark, ev.schema, arrivals, sample_step, scratch_dir("qm17_ck"))
 
     # read-side merge: union of k-row partials -> k smallest ranks;
     # re-delivered events collapse because the merge is a SET take-k
@@ -2466,44 +2197,24 @@ def qm18_streaming_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataF
     )
 
     arrivals = scratch_dir("qm18_arrivals")
-    for b in range(3):
-        bucketed.filter((F.col("event_id") * 7919) % 3 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    stage_waves(
+        (bucketed.filter((F.col("event_id") * 7919) % 3 == b) for b in range(3)), arrivals
+    )
 
     t = TxLogTable(spark, scratch_dir("qm18_txlog"))
-    epoch_files: dict[int, list[str]] = {}
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
-        # bounded collect: ≤ maxFilesPerTrigger paths, recorded so the
-        # replay below re-delivers a completed epoch VERBATIM
-        epoch_files[int(epoch_id)] = [
-            r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
         partial = batch_df.groupBy("bucket").agg(
             F.count("*").cast("long").alias("n")
         )
         t.append(partial, app_id="qm18", txn_version=int(epoch_id))
 
-    q = (
-        spark.readStream.schema(bucketed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qm18_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
     # checkpoint-recovery replay: epoch 0 re-delivered verbatim with its
     # original txn_version — the token makes the double-append a no-op
     # (a SUM merge without the token would inflate every epoch-0 bucket)
-    replayed = spark.read.schema(bucketed.schema).parquet(*epoch_files[0])
-    step(replayed, 0)
+    drain_files(
+        spark, bucketed.schema, arrivals, step, scratch_dir("qm18_ck"), replay_first=True
+    )
 
     hist = t.read().groupBy("bucket").agg(F.sum("n").cast("long").alias("n"))
     w_cum = W.partitionBy().orderBy("bucket").rowsBetween(
@@ -2531,6 +2242,17 @@ def qm18_streaming_quantile_histogram(spark: SparkSession, sf_dir: str) -> DataF
         F.col("cum").alias("n_at_or_below"),
         "total",
     )
+
+
+def _ordered_epochs(df: DataFrame, order_col: str, per_epoch: int) -> list[DataFrame]:
+    """``df`` cut into consecutive arrival epochs of ``per_epoch`` distinct
+    ``order_col`` values each, in order: the waves a recurrence-state query
+    stages so batches arrive in time order (one bounded collect for the
+    epoch count)."""
+    epoch_of = (F.dense_rank().over(W.orderBy(order_col)) - 1)
+    staged = df.withColumn("arrival", (epoch_of / per_epoch).cast("int"))
+    n_epochs = staged.agg(F.max("arrival")).collect()[0][0] + 1  # bounded scalar
+    return [staged.filter(F.col("arrival") == e).drop("arrival") for e in range(n_epochs)]
 
 
 @query(
@@ -2620,23 +2342,13 @@ def qm19_streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # day-ordered arrival epochs: three consecutive day ranges written in
     # order (mtime-ordered pickup, one file per trigger)
-    epoch_of = (F.dense_rank().over(W.orderBy("day_idx")) - 1)
-    staged = daily.withColumn("arrival", (epoch_of / 10).cast("int"))
     arrivals = scratch_dir("qm19_arrivals")
-    n_epochs = staged.agg(F.max("arrival")).collect()[0][0] + 1  # bounded scalar
-    for e in range(n_epochs):
-        staged.filter(F.col("arrival") == e).drop("arrival").coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    stage_waves(_ordered_epochs(daily, "day_idx", 10), arrivals)
 
     t = TxLogTable(spark, scratch_dir("qm19_txlog"))
-    epoch_files: dict[int, list[str]] = {}
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        epoch_files[e] = [
-            r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
         agg = batch_df.groupBy("event_type").agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("day_idx", "y"))),
@@ -2709,27 +2421,12 @@ def qm19_streaming_holt_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.append(state, app_id="qm19", txn_version=e)
 
-    q = (
-        spark.readStream.schema(staged.drop("arrival").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qm19_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
     # checkpoint-recovery replay: epoch 0 re-delivered verbatim. The
     # recompute seeds fresh (deterministic) and the token makes the
     # append a no-op — without it the recurrence would rewind to day 9.
-    replayed = spark.read.schema(staged.drop("arrival").schema).parquet(
-        *epoch_files[0]
+    drain_files(
+        spark, daily.schema, arrivals, step, scratch_dir("qm19_ck"), replay_first=True
     )
-    step(replayed, 0)
 
     final = t.read().withColumn(
         "rn",
@@ -2814,13 +2511,8 @@ def qm20_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select("event_id", "user_id")
 
     arrivals = scratch_dir("qm20_arrivals")
-    for b in range(2):
-        ev.filter((F.col("event_id") * 7919) % 2 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
-    ev.filter(F.col("event_id") % 9 == 0).coalesce(1).write.mode("append").parquet(
-        arrivals
-    )
+    scrambled = [ev.filter((F.col("event_id") * 7919) % 2 == b) for b in range(2)]
+    stage_waves(scrambled + [ev.filter(F.col("event_id") % 9 == 0)], arrivals)
 
     partials = scratch_dir("qm20_partials")
     h = F.conv(
@@ -2843,19 +2535,7 @@ def qm20_streaming_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(partials)
         )
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(sketch_step)
-        .option("checkpointLocation", scratch_dir("qm20_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain_files(spark, ev.schema, arrivals, sketch_step, scratch_dir("qm20_ck"))
 
     regs = spark.read.parquet(partials).groupBy("j").agg(
         F.max("m_j").cast("long").alias("m_j")
@@ -2947,24 +2627,13 @@ def qm21_streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t")
         .agg(F.sum("cents").cast("double").alias("y"))
     )
-    epoch_of = (F.dense_rank().over(W.orderBy("t")) - 1)
-    staged = m.withColumn("arrival", (epoch_of / 32).cast("int"))
     arrivals = scratch_dir("qm21_arrivals")
-    n_epochs = staged.agg(F.max("arrival")).collect()[0][0] + 1  # bounded scalar
-    for e in range(n_epochs):
-        staged.filter(F.col("arrival") == e).drop("arrival").coalesce(
-            1
-        ).write.mode("append").parquet(arrivals)
+    stage_waves(_ordered_epochs(m, "t", 32), arrivals)
 
     t = TxLogTable(spark, scratch_dir("qm21_txlog"))
-    epoch_files: dict[int, list[str]] = {}
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        epoch_files[e] = [
-            r[0]
-            for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
         agg = batch_df.agg(
             F.array_sort(F.collect_list(F.struct("t", "y"))).alias("tys"),
             F.count("*").cast("long").alias("bn"),
@@ -3034,27 +2703,12 @@ def qm21_streaming_holt_winters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.append(state, app_id="qm21", txn_version=e)
 
-    q = (
-        spark.readStream.schema(staged.drop("arrival").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qm21_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
     # checkpoint-recovery replay: epoch 0 re-delivered verbatim. The
     # seed recompute is deterministic and the txn token no-ops the
     # append — without it the recurrence would rewind to month 31.
-    replayed = spark.read.schema(staged.drop("arrival").schema).parquet(
-        *epoch_files[0]
+    drain_files(
+        spark, m.schema, arrivals, step, scratch_dir("qm21_ck"), replay_first=True
     )
-    step(replayed, 0)
 
     final = (
         t.read()
@@ -3137,24 +2791,13 @@ def qm22_streaming_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("cents").cast("double") / 100000000.0).alias("y")
         )
     )
-    epoch_of = (F.dense_rank().over(W.orderBy("t")) - 1)
-    staged = m.withColumn("arrival", (epoch_of / 27).cast("int"))
     arrivals = scratch_dir("qm22_arrivals")
-    n_epochs = staged.agg(F.max("arrival")).collect()[0][0] + 1  # bounded scalar
-    for e in range(n_epochs):
-        staged.filter(F.col("arrival") == e).drop("arrival").coalesce(
-            1
-        ).write.mode("append").parquet(arrivals)
+    stage_waves(_ordered_epochs(m, "t", 27), arrivals)
 
     t = TxLogTable(spark, scratch_dir("qm22_txlog"))
-    epoch_files: dict[int, list[str]] = {}
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        epoch_files[e] = [
-            r[0]
-            for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
         agg = batch_df.agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("t", "y"))),
@@ -3205,25 +2848,10 @@ def qm22_streaming_kalman(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.append(state, app_id="qm22", txn_version=e)
 
-    q = (
-        spark.readStream.schema(staged.drop("arrival").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qm22_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
     # checkpoint-recovery replay: epoch 0 verbatim; the token no-ops.
-    replayed = spark.read.schema(staged.drop("arrival").schema).parquet(
-        *epoch_files[0]
+    drain_files(
+        spark, m.schema, arrivals, step, scratch_dir("qm22_ck"), replay_first=True
     )
-    step(replayed, 0)
 
     final = (
         t.read()
@@ -3305,24 +2933,13 @@ def qm23_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("t")
         .agg((F.sum("cents").cast("double") / 100000000.0).alias("y"))
     )
-    epoch_of = (F.dense_rank().over(W.orderBy("t")) - 1)
-    staged = m.withColumn("arrival", (epoch_of / 27).cast("int"))
     arrivals = scratch_dir("qm23_arrivals")
-    n_epochs = staged.agg(F.max("arrival")).collect()[0][0] + 1  # bounded scalar
-    for e in range(n_epochs):
-        staged.filter(F.col("arrival") == e).drop("arrival").coalesce(
-            1
-        ).write.mode("append").parquet(arrivals)
+    stage_waves(_ordered_epochs(m, "t", 27), arrivals)
 
     t = TxLogTable(spark, scratch_dir("qm23_txlog"))
-    epoch_files: dict[int, list[str]] = {}
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        epoch_files[e] = [
-            r[0]
-            for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
         agg = batch_df.agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("t", "y"))),
@@ -3367,26 +2984,11 @@ def qm23_streaming_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.append(state, app_id="qm23", txn_version=e)
 
-    q = (
-        spark.readStream.schema(staged.drop("arrival").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qm23_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
     # checkpoint-recovery replay: epoch 0 verbatim; the token no-ops —
     # without it the alarm decision itself would rewind.
-    replayed = spark.read.schema(staged.drop("arrival").schema).parquet(
-        *epoch_files[0]
+    drain_files(
+        spark, m.schema, arrivals, step, scratch_dir("qm23_ck"), replay_first=True
     )
-    step(replayed, 0)
 
     final = (
         t.read()
@@ -3451,24 +3053,13 @@ def qm24_streaming_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("y")
         )
     )
-    epoch_of = (F.dense_rank().over(W.orderBy("t")) - 1)
-    staged = days.withColumn("arrival", (epoch_of / 10).cast("int"))
     arrivals = scratch_dir("qm24_arrivals")
-    n_epochs = staged.agg(F.max("arrival")).collect()[0][0] + 1  # bounded scalar
-    for e in range(n_epochs):
-        staged.filter(F.col("arrival") == e).drop("arrival").coalesce(
-            1
-        ).write.mode("append").parquet(arrivals)
+    stage_waves(_ordered_epochs(days, "t", 10), arrivals)
 
     t = TxLogTable(spark, scratch_dir("qm24_txlog"))
-    epoch_files: dict[int, list[str]] = {}
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        epoch_files[e] = [
-            r[0]
-            for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
         agg = batch_df.agg(
             F.transform(
                 F.array_sort(F.collect_list(F.struct("t", "y"))),
@@ -3520,26 +3111,11 @@ def qm24_streaming_croston(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.append(state, app_id="qm24", txn_version=e)
 
-    q = (
-        spark.readStream.schema(staged.drop("arrival").schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qm24_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
     # checkpoint-recovery replay: epoch 0 verbatim; the token no-ops —
     # without it the zero-run counter would double-count.
-    replayed = spark.read.schema(staged.drop("arrival").schema).parquet(
-        *epoch_files[0]
+    drain_files(
+        spark, days.schema, arrivals, step, scratch_dir("qm24_ck"), replay_first=True
     )
-    step(replayed, 0)
 
     final = (
         t.read()
@@ -3646,43 +3222,24 @@ def qm25_streaming_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 10).cast("long").alias("bucket"),
     )
     arrivals = scratch_dir("qm25_arrivals")
-    for b in range(3):
-        bucketed.filter((F.col("event_id") * 7919) % 3 == b).coalesce(
-            1
-        ).write.mode("append").parquet(arrivals)
+    stage_waves(
+        (bucketed.filter((F.col("event_id") * 7919) % 3 == b) for b in range(3)), arrivals
+    )
 
     t = TxLogTable(spark, scratch_dir("qm25_txlog"))
-    epoch_files: dict[int, list[str]] = {}
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        epoch_files[e] = [
-            r[0]
-            for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
         partial = batch_df.groupBy("bucket").agg(
             F.count("*").cast("long").alias("n")
         ).withColumn("is_ref", F.lit(e == 0))
         t.append(partial, app_id="qm25", txn_version=e)
 
-    q = (
-        spark.readStream.schema(bucketed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qm25_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
     # checkpoint-recovery replay: epoch 0 (the REFERENCE) re-delivered
     # verbatim; the token no-ops — else the baseline itself inflates.
-    replayed = spark.read.schema(bucketed.schema).parquet(*epoch_files[0])
-    step(replayed, 0)
+    drain_files(
+        spark, bucketed.schema, arrivals, step, scratch_dir("qm25_ck"), replay_first=True
+    )
 
     merged = t.read()
     ref = (
@@ -3767,20 +3324,14 @@ def qm26_streaming_confusion_monitor(spark: SparkSession, sf_dir: str) -> DataFr
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("b"),
     )
     arrivals = scratch_dir("qm26_arrivals")
-    for e in range(3):
-        ev.filter((F.col("event_id") * 7919) % 3 == e).coalesce(1).write.mode(
-            "append"
-        ).parquet(arrivals)
+    stage_waves(
+        (ev.filter((F.col("event_id") * 7919) % 3 == e) for e in range(3)), arrivals
+    )
 
     t = TxLogTable(spark, scratch_dir("qm26_txlog"))
-    epoch_files: dict[int, list[str]] = {}
 
     def step(batch_df: DataFrame, epoch_id: int) -> None:
         e = int(epoch_id)
-        epoch_files[e] = [
-            r[0]
-            for r in batch_df.select(F.input_file_name()).distinct().collect()
-        ]
         partial = batch_df.agg(
             F.sum(F.col("a") * F.col("b")).cast("long").alias("tp"),
             F.sum(F.col("a") * (1 - F.col("b"))).cast("long").alias("fp"),
@@ -3789,24 +3340,11 @@ def qm26_streaming_confusion_monitor(spark: SparkSession, sf_dir: str) -> DataFr
         ).withColumn("epoch", F.lit(e).cast("long"))
         t.append(partial, app_id="qm26", txn_version=e)
 
-    q = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(arrivals)
-        .writeStream.foreachBatch(step)
-        .option("checkpointLocation", scratch_dir("qm26_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-
     # checkpoint-recovery replay: epoch 0 verbatim; the token no-ops —
     # an untokened double-append inflates exactly the alerted cells.
-    replayed = spark.read.schema(ev.schema).parquet(*epoch_files[0])
-    step(replayed, 0)
+    drain_files(
+        spark, ev.schema, arrivals, step, scratch_dir("qm26_ck"), replay_first=True
+    )
 
     cells = t.read().agg(
         F.sum("tp").cast("long").alias("tp"),

@@ -9,6 +9,7 @@ cluster), Arrow enabled for the Pandas-UDF slow path.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -16,6 +17,13 @@ from better_cdc_spark.io import NANOS_AS_LONG
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 8)))
+
+
+def default_driver_memory(phys_bytes: int) -> str:
+    """``spark.driver.memory`` when SPARK_DRIVER_MEMORY is unset: half of
+    physical memory in whole GiB, at least 1g and at most 32g, so two
+    sessions side by side fit on the host."""
+    return f"{max(1, min(32, phys_bytes // 2 // 2**30))}g"
 
 
 def get_spark(app_name: str = "better_cdc_spark", cpus: int | None = None) -> SparkSession:
@@ -30,7 +38,11 @@ def get_spark(app_name: str = "better_cdc_spark", cpus: int | None = None) -> Sp
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "32g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY")
+            or default_driver_memory(os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.shuffle.spill.compress", "true")
@@ -47,6 +59,23 @@ def get_spark(app_name: str = "better_cdc_spark", cpus: int | None = None) -> Sp
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def conf_override(spark: SparkSession, key: str, value: str):
+    """Set the session conf ``key`` to ``value`` for the with-block, then
+    restore the previous value — or unset the key if it had none — also
+    when the block raises, so an override never leaks into later queries
+    of a shared session."""
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def ckpt(df):

@@ -5,9 +5,14 @@ streaming DataFrame replaces the channels, micro-batches replace the
 size/timeout batching (R10, engine.go:124-220), and Spark's checkpoint
 commit log replaces the LSN checkpoint manager (R16, checkpoint.go:17-82).
 
-Local tests drive finite file sources synchronously with
-``processAllAvailable`` — the batch/stream unification means every operator
-here is the same code that would run against Kafka at scale.
+Local tests drive finite file sources synchronously. One harness is the
+drive path for every finite stream in the engine: ``drain`` runs a started
+query to completion and always stops it; ``drain_files`` streams a parquet
+directory through a foreachBatch step one file per micro-batch (optionally
+re-delivering epoch 0 afterwards, the checkpoint-recovery replay);
+``stage_waves`` writes the arrival files such a stream admits in order. The
+batch/stream unification means every operator here is the same code that
+would run against Kafka at scale.
 """
 
 from __future__ import annotations
@@ -16,10 +21,12 @@ import os
 import shutil
 import tempfile
 import uuid
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import StreamingQuery
 
 from better_cdc_spark.io import NANOS_AS_LONG, read_parquet
 from better_cdc_spark.scratch import scratch_dir
@@ -117,6 +124,69 @@ def events_stream(
     return events_ts_to_timestamp(raw)
 
 
+def drain(q: StreamingQuery) -> None:
+    """Process everything the started query's source holds, then stop it.
+
+    The stop runs even when a micro-batch raises, so a failed query never
+    stays active in the session; the failure still propagates."""
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+        q.awaitTermination()
+
+
+def drain_files(
+    spark: SparkSession,
+    schema: T.StructType,
+    src: str,
+    step: Callable[[DataFrame, int], None],
+    ck: str,
+    *,
+    replay_first: bool = False,
+) -> dict[int, list[str]]:
+    """Stream the parquet directory ``src`` through the foreachBatch
+    ``step``, one file per micro-batch, checkpointing at ``ck``, and drain.
+
+    ``ck`` is a path, so two drains over one checkpoint resume where the
+    first stopped. With ``replay_first`` each epoch's input files are
+    recorded (a bounded collect of at most maxFilesPerTrigger paths, the
+    epoch's first job) and, once the stream has drained, epoch 0 is
+    re-delivered verbatim through the same step under epoch id 0 — the
+    checkpoint-recovery replay an exactly-once sink must absorb. Returns
+    the recorded epoch → files map (empty without ``replay_first``).
+    """
+    epoch_files: dict[int, list[str]] = {}
+
+    def run(batch_df: DataFrame, epoch_id: int) -> None:
+        if replay_first:
+            epoch_files[int(epoch_id)] = [
+                r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()
+            ]
+        step(batch_df, epoch_id)
+
+    drain(
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+        .writeStream.foreachBatch(run)
+        .option("checkpointLocation", ck)
+        .start()
+    )
+    if replay_first:
+        run(spark.read.schema(schema).parquet(*epoch_files[0]), 0)
+    return epoch_files
+
+
+def stage_waves(frames: Iterable[DataFrame], path: str) -> None:
+    """Append each frame to the parquet directory ``path`` as one file, in
+    order: the arrival files a ``drain_files`` stream admits one per
+    micro-batch, in write order (the file source lists by modification
+    time)."""
+    for df in frames:
+        df.coalesce(1).write.mode("append").parquet(path)
+
+
 def run_to_memory(
     sdf: DataFrame, *, mode: str = "complete", name: str | None = None
 ) -> DataFrame:
@@ -130,11 +200,7 @@ def run_to_memory(
         .option("checkpointLocation", scratch_dir("run_to_memory_ck"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain(q)
     # Materialize and DROP the sink table: the memory sink holds its rows
     # via a catalog strong reference forever, so a long session running
     # many streaming queries (full sweep ≈ 30+) accumulates every result
@@ -155,17 +221,12 @@ def run_to_parquet(sdf: DataFrame, out_dir: str, *, mode: str = "append") -> Non
     def write_batch(batch_df: DataFrame, _epoch: int) -> None:
         batch_df.write.mode("append").parquet(out_dir)
 
-    q = (
+    drain(
         sdf.writeStream.outputMode(mode)
         .foreachBatch(write_batch)
         .option("checkpointLocation", scratch_dir("run_to_parquet_ck"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
 
 
 def stamp_ordered_mtimes(src_dir: str, pattern: str = "part-*") -> None:

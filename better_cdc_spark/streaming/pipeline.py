@@ -69,6 +69,7 @@ from pyspark.sql import types as T
 from better_cdc_spark.cdc.normalize import normalize_changelog
 from better_cdc_spark.config import EngineConfig
 from better_cdc_spark.schemas import CHANGE_LOG_SCHEMA
+from better_cdc_spark.streaming.core import drain
 
 
 class CDCStreamPipeline:
@@ -383,12 +384,7 @@ class CDCStreamPipeline:
         )
 
     def run_available(self) -> None:
-        q = self.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
+        drain(self.start())
 
     def sink(self) -> DataFrame:
         empty = normalize_changelog(

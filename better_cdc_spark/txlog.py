@@ -45,7 +45,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
-from better_cdc_spark.session import ckpt
+from better_cdc_spark.session import ckpt, conf_override
 
 
 class CommitConflict(RuntimeError):
@@ -161,16 +161,10 @@ class TxLogTable:
         # timestamp stats_cols actually skip files. Session-conf
         # save/restore; decimals remain stats-less (pyarrow cannot
         # extract decimal stats) and are kept conservatively.
-        key = "spark.sql.parquet.outputTimestampType"
-        prev = self.spark.conf.get(key, None)
-        self.spark.conf.set(key, "TIMESTAMP_MICROS")
-        try:
+        with conf_override(
+            self.spark, "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
+        ):
             df.write.parquet(out)
-        finally:
-            if prev is None:
-                self.spark.conf.unset(key)
-            else:
-                self.spark.conf.set(key, prev)
         return [
             os.path.join(out, f)
             for f in os.listdir(out)

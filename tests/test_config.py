@@ -155,3 +155,31 @@ def test_env_example_in_sync():
     stale = documented - code_vars
     assert not missing, f".env.example missing vars read by code: {sorted(missing)}"
     assert not stale, f".env.example documents vars no code reads: {sorted(stale)}"
+
+
+def test_default_driver_memory_is_half_of_physical_in_whole_gib():
+    from better_cdc_spark.session import default_driver_memory
+
+    gib = 2**30
+    assert default_driver_memory(int(15.7 * gib)) == "7g"
+    assert default_driver_memory(16 * gib) == "8g"
+    assert default_driver_memory(1 * gib) == "1g"  # never below 1g
+    assert default_driver_memory(64 * gib) == "32g"
+    assert default_driver_memory(2048 * gib) == "32g"  # capped
+
+
+@pytest.mark.parametrize("prev", [None, "123456"])
+def test_conf_override_restores_the_previous_value_after_a_raise(spark, prev):
+    from better_cdc_spark.session import conf_override
+
+    key = "spark.sql.files.openCostInBytes"
+    spark.conf.unset(key)
+    if prev is not None:
+        spark.conf.set(key, prev)
+    with pytest.raises(RuntimeError, match="inside the block"):
+        with conf_override(spark, key, str(64 * 1024)):
+            assert spark.conf.get(key) == str(64 * 1024)
+            raise RuntimeError("inside the block")
+    # an unset key comes back unset, not pinned to the override or a default
+    assert spark.conf.get(key, None) == prev
+    spark.conf.unset(key)

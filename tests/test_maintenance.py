@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import glob
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -16,9 +15,9 @@ def _parquet_files(path: str) -> list[str]:
     return glob.glob(f"{path}/*.parquet")
 
 
-def test_compaction_reduces_files_preserves_rows(spark):
-    src = tempfile.mkdtemp(prefix="bcs_frag_")
-    dst = tempfile.mkdtemp(prefix="bcs_compact_")
+def test_compaction_reduces_files_preserves_rows(spark, tmp_path):
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
     orders = load_table(spark, SF_SMOKE, "orders")
     orders.repartition(32).write.mode("overwrite").parquet(src)
     assert len(_parquet_files(src)) == 32
@@ -30,10 +29,10 @@ def test_compaction_reduces_files_preserves_rows(spark):
     assert a == b
 
 
-def test_compaction_range_clusters(spark):
+def test_compaction_range_clusters(spark, tmp_path):
     """order_by produces disjoint per-file key ranges (min/max skipping)."""
-    src = tempfile.mkdtemp(prefix="bcs_frag2_")
-    dst = tempfile.mkdtemp(prefix="bcs_compact2_")
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
     orders = load_table(spark, SF_SMOKE, "orders")
     orders.repartition(16).write.mode("overwrite").parquet(src)
     total = _dir_size(src)
@@ -63,13 +62,13 @@ def _dir_size(path: str) -> int:
     )
 
 
-def test_zorder_boxes_shrink_on_both_dims(spark):
+def test_zorder_boxes_shrink_on_both_dims(spark, tmp_path):
     """Z-order: per-file min/max boxes are small in BOTH dimensions;
     plain round-robin files cover ~the whole range of each."""
     from better_cdc_spark.maintenance import zorder_rewrite
 
-    src = tempfile.mkdtemp(prefix="bcs_zsrc_")
-    dst = tempfile.mkdtemp(prefix="bcs_zdst_")
+    src = str(tmp_path / "src")
+    dst = str(tmp_path / "dst")
     orders = load_table(spark, SF_SMOKE, "orders")
     orders.repartition(16).write.mode("overwrite").parquet(src)
     total = _dir_size(src)

@@ -179,14 +179,12 @@ def test_q44_sessionize_single_exchange(spark):
     assert n_exchange == 1, f"expected one exchange, plan has {n_exchange}"
 
 
-def test_q05_partitioned_read_prunes_partitions(spark):
+def test_q05_partitioned_read_prunes_partitions(spark, tmp_path):
     """Reading one o_orderstatus partition must scan only that directory."""
-    import tempfile
-
     from pyspark.sql import functions as F
     from better_cdc_spark.io import load_table
 
-    out = tempfile.mkdtemp(prefix="bcs_prune_")
+    out = str(tmp_path / "orders")
     load_table(spark, SF_SMOKE, "orders").write.mode("overwrite").partitionBy(
         "o_orderstatus"
     ).parquet(out)
@@ -267,19 +265,17 @@ def test_q98d_pii_scrub_is_narrow(spark):
     assert "Exchange" not in plan
 
 
-def test_dynamic_partition_pruning_fires_on_partitioned_fact(spark):
+def test_dynamic_partition_pruning_fires_on_partitioned_fact(spark, tmp_path):
     """Join-driven partition pruning (DPP): a fact partitioned on the join
     key + a selectively-filtered dim must plan a dynamicpruning expression
     in the fact scan's PartitionFilters — at 100 TB this is what turns
     'scan every date partition' into 'scan the three the dim selects'."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from better_cdc_spark.io import load_table
 
     spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    out = f"{tempfile.gettempdir()}/bcs_dpp_fact"
+    out = str(tmp_path / "fact")
     orders = load_table(spark, SF_SMOKE, "orders")
     orders.write.mode("overwrite").partitionBy("o_orderpriority").parquet(out)
     fact = spark.read.parquet(out)

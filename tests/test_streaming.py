@@ -480,14 +480,13 @@ def test_incomplete_pending_snapshot_is_ignored(spark, tmp_path):
     assert pipe.pending().count() == 2
 
 
-def test_rate_limited_source_runs_multiple_batches(spark):
+def test_rate_limited_source_runs_multiple_batches(spark, tmp_path):
     """maxFilesPerTrigger=1 over 4 splits must produce >= 4 micro-batches
     (state demonstrably carried across epochs, not resolved in one)."""
-    import tempfile
     import uuid
 
     from pyspark.sql import functions as F
-    from better_cdc_spark.streaming.core import events_stream
+    from better_cdc_spark.streaming.core import drain, events_stream
     from tests.conftest import SF_SMOKE
 
     agg = (
@@ -500,15 +499,11 @@ def test_rate_limited_source_runs_multiple_batches(spark):
         agg.writeStream.outputMode("complete")
         .format("memory")
         .queryName(name)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="bcs_ck_mb_"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
         .start()
     )
-    try:
-        q.processAllAvailable()
-        batches = q.lastProgress["batchId"] + 1
-    finally:
-        q.stop()
-        q.awaitTermination()
+    drain(q)
+    batches = q.lastProgress["batchId"] + 1
     assert batches >= 4, f"expected >=4 micro-batches, got {batches}"
 
 
